@@ -31,8 +31,9 @@ are split across all shards by a deterministic, score-invisible doc hash
 and merge losslessly at query time (replacing the reference's lossy
 dup_limit=1000 cap, lmdb_ops.py:139-166).  Corpus stats (n_docs, avgdl)
 come from the checkpoint rows — no extra aggregation job — and term_stats
-is derived from the written blocks' metadata columns (a 2-column scan of
-compressed block headers, never a corpus re-scan).
+is derived from the encoded blocks' headers (bucket, term, n), never from
+a corpus re-scan.  Upsert/delete run the same stage B restricted to the
+doc-hash shards of the changed docs (``build_postings(shards=...)``).
 
 Scale notes (100 TB / 10^12 docs):
 - Stage A is one scan per resume-group writing columnar docs — the
@@ -219,6 +220,17 @@ def _normalize_input(pages: DataFrame) -> DataFrame:
     return out
 
 
+def _overwrite(df: DataFrame, partition_mode: str):
+    """``df.write`` in overwrite mode with the partition-overwrite mode set
+    on THIS write only: ``"static"`` replaces the whole table dir,
+    ``"dynamic"`` only the partition dirs the output touches.  The write
+    option wins over ``spark.sql.sources.partitionOverwriteMode``, so
+    concurrent writers (stage B next to stage C, an upsert next to a
+    serving query) never race on a session-wide flip, and the caller's
+    session conf is left as it was."""
+    return df.write.mode("overwrite").option("partitionOverwriteMode", partition_mode)
+
+
 def build_segments(
     spark: SparkSession,
     pages: DataFrame,
@@ -239,7 +251,6 @@ def build_segments(
     """
     import shutil
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     pages_p = _normalize_input(pages).withColumn(
         "part", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
     )
@@ -320,7 +331,7 @@ def build_segments(
             F.col("tt.pos_offs").alias("pos_offs"),
         )
         # dynamic partition overwrite -> idempotent retry per group
-        docs.write.mode("overwrite").partitionBy("part").parquet(cat.docs)
+        _overwrite(docs, "dynamic").partitionBy("part").parquet(cat.docs)
 
         # per-part fingerprint + corpus stats from the JUST-WRITTEN group
         # partitions: a 4-column scan of compact parquet, no re-tokenize
@@ -415,10 +426,10 @@ def build_derived(
         # dirs -> static committer (no per-partition staging moves)
         for t in tables:
             shutil.rmtree(t, ignore_errors=True)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
+        mode = "static"
         n = max(len(_read_checkpoint_rows(spark, cat)), 1)
     else:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        mode = "dynamic"
         docs = docs.filter(F.col("part").isin(list(parts)))
         n = max(len(parts), 1)
         for p in parts:  # clear affected dirs (a part may become empty)
@@ -443,13 +454,8 @@ def build_derived(
     write_jobs.append(
         (
             "derived: units",
-            lambda: (
-                units.repartitionByRange(n, "part")
-                .sortWithinPartitions("part", "content_sh")
-                .write.mode("overwrite")
-                .partitionBy("part")
-                .parquet(cat.units)
-            ),
+            units.repartitionByRange(n, "part").sortWithinPartitions("part", "content_sh"),
+            cat.units,
         )
     )
     sp = docs.select("part", "doc_id", F.explode("segs").alias("s")).select(
@@ -465,13 +471,8 @@ def build_derived(
     write_jobs.append(
         (
             "derived: simprints",
-            lambda: (
-                sp.repartitionByRange(n, "part")
-                .sortWithinPartitions("part", "simhash")
-                .write.mode("overwrite")
-                .partitionBy("part")
-                .parquet(cat.simprints)
-            ),
+            sp.repartitionByRange(n, "part").sortWithinPartitions("part", "simhash"),
+            cat.simprints,
         )
     )
 
@@ -517,13 +518,8 @@ def build_derived(
     write_jobs.append(
         (
             "derived: unit_bands",
-            lambda: (
-                ub.repartitionByRange(n, "part")
-                .sortWithinPartitions("part", "band", "key")
-                .write.mode("overwrite")
-                .partitionBy("part")
-                .parquet(cat.unit_bands)
-            ),
+            ub.repartitionByRange(n, "part").sortWithinPartitions("part", "band", "key"),
+            cat.unit_bands,
         )
     )
 
@@ -549,13 +545,8 @@ def build_derived(
     write_jobs.append(
         (
             "derived: simprint_bands",
-            lambda: (
-                sb.repartitionByRange(n, "part")
-                .sortWithinPartitions("part", "band", "key")
-                .write.mode("overwrite")
-                .partitionBy("part")
-                .parquet(cat.simprint_bands)
-            ),
+            sb.repartitionByRange(n, "part").sortWithinPartitions("part", "band", "key"),
+            cat.simprint_bands,
         )
     )
 
@@ -609,24 +600,15 @@ def build_derived(
             "part", "doc_id", "seg_idx",
             F.col("band").cast("int").alias("band"), "key",
         )
-        write_jobs.append(
-            (
-                "derived: simprint_bands2",
-                lambda: (
-                    sb2.write.mode("overwrite")
-                    .partitionBy("part")
-                    .parquet(cat.simprint_bands2)
-                ),
-            )
-        )
+        write_jobs.append(("derived: simprint_bands2", sb2, cat.simprint_bands2))
 
     from concurrent.futures import ThreadPoolExecutor
 
     def _run(job):
-        desc, fn = job
+        desc, df, path = job
         spark.sparkContext.setJobDescription(desc)
         try:
-            fn()
+            _overwrite(df, mode).partitionBy("part").parquet(path)
         finally:
             spark.sparkContext.setJobDescription(None)
 
@@ -817,6 +799,12 @@ def corpus_stats_from_checkpoints(
     return n_docs, (total_dl / n_docs if n_docs else 0.0)
 
 
+def _shard_col(n_shards: int):
+    """Doc-hash shard of ``doc_id`` (JVM xxhash64 — not computable on the
+    driver, so the write paths collect it next to the keys they need)."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
+
+
 def _posting_rows(docs: DataFrame, n_shards: int, cfg: EngineConfig) -> DataFrame:
     """docs -> one row per (doc, term) posting: (shard, tgroup, term,
     doc_id, tf, doc_len, pos).  Per-posting positions are a JVM substring
@@ -838,7 +826,7 @@ def _posting_rows(docs: DataFrame, n_shards: int, cfg: EngineConfig) -> DataFram
             ).alias("z"),
         )
         .select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
+            _shard_col(n_shards).alias("shard"),
             F.pmod(F.xxhash64("z.term"), F.lit(cfg.build_fanout))
             .cast("int")
             .alias("tgroup"),
@@ -853,7 +841,7 @@ def _posting_rows(docs: DataFrame, n_shards: int, cfg: EngineConfig) -> DataFram
     )
 
 
-def _write_blocks(blocks: DataFrame, path: str, n_buckets: int, n_shards: int) -> None:
+def _write_blocks(blocks: DataFrame, path: str, partition_mode: str) -> None:
     """Physical layout: partition dirs by (bucket, shard) — bucket is the
     query-time prune key, shard dirs make upsert/delete a TARGETED
     per-shard rewrite (dynamic overwrite touches only the changed shard's
@@ -862,31 +850,29 @@ def _write_blocks(blocks: DataFrame, path: str, n_buckets: int, n_shards: int) -
     non-query terms.  One write task per BUCKET, each emitting its
     n_shards dir files (measured: 512 single-dir range tasks cost ~2x the
     per-bucket write at this scale; dir count is unchanged)."""
-    (
-        blocks.repartition("bucket")
-        .sortWithinPartitions("bucket", "shard", "term", "block_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket", "shard")
-        .parquet(path)
-    )
+    _overwrite(
+        blocks.repartition("bucket").sortWithinPartitions(
+            "bucket", "shard", "term", "block_id"
+        ),
+        partition_mode,
+    ).partitionBy("bucket", "shard").parquet(path)
 
 
-def _write_term_stats(blocks: DataFrame, cat: IndexCatalog) -> None:
-    """Global exact term stats from the block rows just computed (df = sum
-    of block counts; (doc, term) is unique).  Takes the CACHED blocks
-    DataFrame rather than re-reading the written postings: partition
-    discovery + footer reads over the n_buckets x n_shards dir layout are
-    driver-bound and core-count independent (measured ~3 s at 512 dirs —
-    pure serial tax on the N->4N scaling leg), while the cached partial
-    aggregation is map-side and scales with the cluster."""
-    stats = blocks.groupBy("bucket", "term").agg(F.sum("n").alias("df"))
-    (
-        stats.repartition("bucket")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(cat.term_stats)
-    )
+def _write_term_stats(headers: DataFrame, cat: IndexCatalog) -> None:
+    """Global exact term stats from block headers (bucket, term, n): df =
+    sum of block counts, since (doc, term) is unique.  The caller passes
+    the CACHED new blocks (plus, on a shard-restricted rebuild, a header
+    scan of the untouched shards) rather than re-reading everything it
+    just wrote: partition discovery + footer reads over the n_buckets x
+    n_shards dir layout are driver-bound and core-count independent
+    (measured ~3 s at 512 dirs — pure serial tax on the N->4N scaling
+    leg), while the cached partial aggregation is map-side and scales
+    with the cluster.  The table is small (one row per term) and always
+    rewritten whole."""
+    stats = headers.groupBy("bucket", "term").agg(F.sum("n").alias("df"))
+    _overwrite(
+        stats.repartition("bucket").sortWithinPartitions("term"), "static"
+    ).partitionBy("bucket").parquet(cat.term_stats)
 
 
 def _write_index_meta(
@@ -915,30 +901,40 @@ def build_postings(
     cfg: EngineConfig = DEFAULT,
     n_shards: int | None = None,
     run_id: str = "run",
+    shards: list[int] | None = None,
 ) -> BuildResult:
     """Stage B: docs -> sharded compressed postings + term_stats + meta.
 
-    FULL overwrite semantics: the output dirs are cleared first — dynamic
-    partition overwrite alone would leave stale bucket/shard dirs behind
-    when the new vocabulary misses a bucket (deleted docs could silently
-    resurface from surviving blocks)."""
+    ``shards=None`` (or every shard) is the full build: the output dirs
+    are cleared first — dynamic partition overwrite alone would leave
+    stale bucket/shard dirs behind when the new vocabulary misses a
+    bucket (deleted docs could silently resurface from surviving blocks).
+    ``shards=[...]`` is the upsert/delete path: only those doc-hash
+    shards are re-encoded from docs, only their (bucket, shard) dirs are
+    cleared and rewritten, and every other shard's files stay untouched.
+
+    Scale trade of the shard-restricted path: the shard filter runs on a
+    JVM columnar scan of ALL of docs (the shard is a hash of doc_id, not
+    a docs partition key), so a 1-doc upsert still reads the docs table's
+    posting columns once; what it no longer does is decode old posting
+    blocks back to rows in Python.  Postings encoded here are therefore
+    bit-identical to a from-scratch build of the same docs."""
+    import glob
     import shutil
+
+    from pyspark import StorageLevel
 
     t0 = time.time()
     n_shards = n_shards or 16
     n_docs, avgdl = corpus_stats_from_checkpoints(spark, cat)
-    shutil.rmtree(cat.postings, ignore_errors=True)
-    shutil.rmtree(cat.term_stats, ignore_errors=True)
-    # output dirs are now empty -> STATIC committer: the dynamic-overwrite
-    # committer does driver-serial per-partition staging moves, a
-    # core-count-independent cost that grows with the (bucket, shard) dir
-    # count and eats the fast leg's scaling (measured on the 512-dir
-    # layout); dynamic mode is for the INCREMENTAL path only
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-
+    if shards is not None and set(range(n_shards)) <= set(shards):
+        shards = None  # every shard affected: the full build
     # docs carry doc_len inline (denormalized at stage A) so stage B needs
     # NO join — the term shuffle is the build's only wide dependency
     docs = spark.read.parquet(cat.docs)
+    if shards is not None:
+        # filter BEFORE the explode: untouched shards never leave the scan
+        docs = docs.filter(_shard_col(n_shards).isin(shards))
     blocks = (
         _posting_rows(docs, n_shards, cfg)
         .groupBy("shard", "tgroup")
@@ -949,20 +945,45 @@ def build_postings(
     # corpus or re-reads the 512-dir layout it just wrote (driver-bound
     # listing, a serial term on the scaling leg).  MEMORY_AND_DISK spills
     # gracefully when the blob volume outgrows executor storage at scale.
-    from pyspark import StorageLevel
-
+    # The blocks come from docs, never from postings, so clearing the
+    # postings dirs below cannot invalidate what the plan reads.
     blocks = blocks.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        _write_blocks(blocks, cat.postings, cfg.term_buckets, n_shards)
-        _write_term_stats(blocks, cat)
+        headers = blocks.select("bucket", "term", "n")
+        if shards is None:
+            # cleared output dir -> STATIC committer: the dynamic-overwrite
+            # committer does driver-serial per-partition staging moves, a
+            # core-count-independent cost that grows with the (bucket,
+            # shard) dir count (measured on the 512-dir layout)
+            shutil.rmtree(cat.postings, ignore_errors=True)
+            _write_blocks(blocks, cat.postings, "static")
+        else:
+            # a shard emptied of some bucket must not leave stale blocks
+            for s in shards:
+                for d in glob.glob(os.path.join(cat.postings, "bucket=*", f"shard={s}")):
+                    shutil.rmtree(d, ignore_errors=True)
+            _write_blocks(blocks, cat.postings, "dynamic")
+            kept = [s for s in range(n_shards) if s not in shards]
+            if glob.glob(os.path.join(cat.postings, "bucket=*", "shard=*")):
+                headers = headers.unionByName(
+                    spark.read.parquet(cat.postings)
+                    .filter(F.col("shard").isin(kept))
+                    .select("bucket", "term", "n")
+                )
+            for d in glob.glob(os.path.join(cat.postings, "bucket=*")):
+                if not os.listdir(d):  # bucket emptied of every shard dir
+                    shutil.rmtree(d, ignore_errors=True)
+        shutil.rmtree(cat.term_stats, ignore_errors=True)
+        _write_term_stats(headers, cat)
     finally:
         blocks.unpersist()
 
     secs = time.time() - t0
     _write_index_meta(cat, cfg, n_docs, avgdl, n_shards, run_id)
+    stage = "postings" if shards is None else "postings_incr"
     _append_metrics(
         cat,
-        [{"run_id": run_id, "stage": "postings", "part": -1, "docs": n_docs, "secs": secs}],
+        [{"run_id": run_id, "stage": stage, "part": -1, "docs": n_docs, "secs": secs}],
     )
     return BuildResult(n_docs, avgdl, [], [], secs)
 
@@ -971,238 +992,15 @@ def build_postings(
 # The reference updates an asset by deleting its stale postings and vectors
 # then inserting the new ones inside one LMDB txn (usearch/index.py:337-348,
 # simprint/lmdb_ops.py:84-108).  The Spark analogue: merge the delta into
-# ONLY the affected docs partitions (url-keyed upsert / delete), re-commit
-# their checkpoint fingerprints, and maintain the derived tables
-# incrementally — units/simprints by rewriting the affected url-part dirs,
-# postings by re-encoding ONLY the affected doc-hash shards (old shard
-# blocks are decoded back to posting rows, changed docs dropped, fresh rows
-# merged in, and the shard's (bucket, shard) partition dirs overwritten;
-# term_stats is patched by the old-vs-new shard df diff).  Work scales with
-# |shard| + |delta|, never with the corpus.
-
-_ROWS_SCHEMA = (
-    "shard int, term string, doc_id long, tf long, doc_len long, pos binary"
-)
-
-
-def _blocks_to_rows_fn():
-    """mapInPandas decoder: posting blocks -> per-posting rows, inverse of
-    _encode_blocks_fn (numpy-vectorized per block; the positions payload is
-    re-sliced per posting from the LEB128 code boundaries)."""
-
-    def gen(batches):
-        for pdf in batches:
-            shards, terms, ids, tfs, dls, poss = [], [], [], [], [], []
-            for sh, term, n, min_doc, id_buf, tf_buf, dl_buf, pos_buf in zip(
-                pdf["shard"], pdf["term"], pdf["n"], pdf["min_doc"],
-                pdf["doc_ids"], pdf["tfs"], pdf["dls"], pdf["poss"],
-            ):
-                n = int(n)
-                u0 = np.int64(int(min_doc)).astype(np.uint64) ^ codec._SIGN_BIT
-                d = np.empty(n, dtype=np.uint64)
-                d[0] = u0
-                if n > 1:
-                    d[1:] = u0 + np.cumsum(
-                        codec.for_unpack(id_buf, n - 1), dtype=np.uint64
-                    )
-                d = (d ^ codec._SIGN_BIT).view(np.int64)
-                tf = codec.for_unpack(tf_buf, n).view(np.int64)
-                dl = codec.for_unpack(dl_buf, n).view(np.int64)
-                # positions: LEB128 codes end at bytes with the high bit
-                # clear; posting p owns tf[p] consecutive codes
-                b = np.frombuffer(pos_buf, dtype=np.uint8)
-                ends = np.flatnonzero((b & 0x80) == 0) + 1
-                cum_tf = np.cumsum(tf)
-                pe = ends[cum_tf - 1]
-                ps = np.concatenate([[0], pe[:-1]])
-                poss.extend(bytes(pos_buf[s:e]) for s, e in zip(ps, pe))
-                shards.append(np.full(n, int(sh), dtype=np.int32))
-                terms.extend([term] * n)
-                ids.append(d)
-                tfs.append(tf)
-                dls.append(dl)
-            if not ids:
-                continue
-            yield pd.DataFrame(
-                {
-                    "shard": np.concatenate(shards),
-                    "term": terms,
-                    "doc_id": np.concatenate(ids),
-                    "tf": np.concatenate(tfs),
-                    "doc_len": np.concatenate(dls),
-                    "pos": poss,
-                }
-            )
-
-    return gen
-
-
-def _shards_of(spark: SparkSession, doc_ids: list[int], n_shards: int) -> list[int]:
-    """Doc-hash shards of the given ids (tiny Spark job — shard uses the
-    JVM xxhash64, not computable driver-side)."""
-    if not doc_ids:
-        return []
-    df = spark.createDataFrame([(int(i),) for i in doc_ids], "doc_id long")
-    rows = (
-        df.select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("s")
-        )
-        .distinct()
-        .collect()
-    )
-    return sorted(int(r["s"]) for r in rows)
-
-
-def update_postings_incremental(
-    spark: SparkSession,
-    cat: IndexCatalog,
-    cfg: EngineConfig,
-    changed_ids: list[int],
-    parts: list[int],
-    run_id: str = "update",
-) -> list[int]:
-    """Re-encode ONLY the doc-hash shards containing changed docs.
-
-    Steps (delete-stale-then-insert, usearch/index.py:337-348):
-    1. snapshot the affected shards' per-(bucket, term) df (old state);
-    2. decode the affected shards' blocks to rows, drop changed doc_ids,
-       union fresh rows of the changed docs (read from the affected
-       url-part dirs only), re-encode per (shard, tgroup);
-    3. clear the affected shard partition dirs and rewrite them;
-    4. patch term_stats with the old/new df diff (affected buckets only);
-    5. refresh meta corpus stats from the re-committed checkpoints.
-    Untouched shards' files are never rewritten (mtime-stable).
-    Returns the affected shard list.
-    """
-    import os
-    import shutil
-
-    t0 = time.time()
-    if not changed_ids:
-        return []
-    meta = cat.read_meta()
-    n_shards = int(meta["n_shards"])
-    shards = _shards_of(spark, changed_ids, n_shards)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    ids_df = spark.createDataFrame(
-        [(int(i),) for i in sorted(set(changed_ids))], "doc_id long"
-    )
-    shard_sql = ", ".join(str(s) for s in shards)
-
-    # (1) old per-(bucket, term) df of the affected shards — materialized
-    # BEFORE the overwrite invalidates the files the plan reads
-    old_blocks = spark.read.parquet(cat.postings).filter(f"shard IN ({shard_sql})")
-    old_stats = (
-        old_blocks.groupBy("bucket", "term")
-        .agg(F.sum("n").alias("df_old"))
-        .localCheckpoint()
-    )
-
-    # (2) surviving old rows + fresh rows of the changed docs
-    old_rows = (
-        old_blocks.mapInPandas(_blocks_to_rows_fn(), _ROWS_SCHEMA)
-        .join(F.broadcast(ids_df), "doc_id", "left_anti")
-    )
-    part_sql = ", ".join(str(p) for p in parts)
-    fresh_docs = (
-        spark.read.parquet(cat.docs)
-        .filter(f"part IN ({part_sql})" if parts else "false")
-        .join(F.broadcast(ids_df), "doc_id", "left_semi")
-    )
-    fresh_rows = _posting_rows(fresh_docs, n_shards, cfg).drop("tgroup")
-    all_rows = old_rows.unionByName(fresh_rows).withColumn(
-        "tgroup",
-        F.pmod(F.xxhash64("term"), F.lit(cfg.build_fanout)).cast("int"),
-    )
-    blocks = (
-        all_rows.groupBy("shard", "tgroup")
-        .applyInPandas(_encode_blocks_fn(cfg), POSTINGS_SCHEMA)
-        .localCheckpoint()  # materialize before clearing the source dirs
-    )
-
-    # (3) clear + rewrite the affected shard dirs (a shard emptied of some
-    # bucket must not leave stale blocks behind)
-    import glob
-
-    for s in shards:
-        for d in glob.glob(os.path.join(cat.postings, "bucket=*", f"shard={s}")):
-            shutil.rmtree(d, ignore_errors=True)
-    (
-        blocks.repartition("bucket")
-        .sortWithinPartitions("bucket", "shard", "term", "block_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket", "shard")
-        .parquet(cat.postings)
-    )
-
-    # (4) term_stats patch: df' = df + (new - old) over affected buckets
-    new_stats = (
-        spark.read.parquet(cat.postings)
-        .filter(f"shard IN ({shard_sql})")
-        .groupBy("bucket", "term")
-        .agg(F.sum("n").alias("df_new"))
-    )
-    delta = (
-        old_stats.join(new_stats, ["bucket", "term"], "full_outer")
-        .select(
-            "bucket",
-            "term",
-            (
-                F.coalesce("df_new", F.lit(0)) - F.coalesce("df_old", F.lit(0))
-            ).alias("d"),
-        )
-        .filter(F.col("d") != 0)
-        .localCheckpoint()
-    )
-    aff_buckets = sorted(
-        int(r["bucket"]) for r in delta.select("bucket").distinct().collect()
-    )
-    if aff_buckets:
-        b_sql = ", ".join(str(b) for b in aff_buckets)
-        stats_new = (
-            spark.read.parquet(cat.term_stats)
-            .filter(f"bucket IN ({b_sql})")
-            .join(delta, ["bucket", "term"], "full_outer")
-            .select(
-                "bucket",
-                "term",
-                (F.coalesce("df", F.lit(0)) + F.coalesce("d", F.lit(0))).alias("df"),
-            )
-            .filter(F.col("df") > 0)
-            .localCheckpoint()
-        )
-        live = {
-            int(r["bucket"])
-            for r in stats_new.select("bucket").distinct().collect()
-        }
-        for b in aff_buckets:  # bucket lost its last term -> drop its dir
-            if b not in live:
-                shutil.rmtree(
-                    os.path.join(cat.term_stats, f"bucket={b}"), ignore_errors=True
-                )
-        if live:
-            (
-                stats_new.repartition("bucket")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(cat.term_stats)
-            )
-    # prune bucket dirs emptied of every shard dir
-    for d in glob.glob(os.path.join(cat.postings, "bucket=*")):
-        if not any(e.startswith("shard=") for e in os.listdir(d)):
-            shutil.rmtree(d, ignore_errors=True)
-
-    # (5) refresh corpus stats
-    n_docs, avgdl = corpus_stats_from_checkpoints(spark, cat)
-    _write_index_meta(cat, cfg, n_docs, avgdl, n_shards, run_id)
-    _append_metrics(
-        cat,
-        [{"run_id": run_id, "stage": "postings_incr", "part": -1,
-          "docs": len(changed_ids), "secs": time.time() - t0}],
-    )
-    return shards
-
+# ONLY the affected docs partitions (url-keyed upsert / delete) and
+# re-commit their checkpoint fingerprints; then, side by side, rewrite the
+# affected url-part dirs of the derived tables (units, simprints, bands)
+# and re-run stage B restricted to the doc-hash shards of the changed docs
+# (build_postings(shards=...): those shards' posting rows are re-encoded
+# from docs and their (bucket, shard) dirs rewritten; term_stats is
+# recomputed from the new block headers plus a header scan of the
+# untouched shards).  A delta that touches every shard is exactly the full
+# stage B.
 
 _DOC_COLS = [
     "part", "doc_id", "url", "lang", "h1", "h2",
@@ -1211,12 +1009,19 @@ _DOC_COLS = [
 ]
 
 
-def _require_ckpt_parts(spark: SparkSession, cat: IndexCatalog) -> tuple[dict, int]:
+def _open_for_update(
+    spark: SparkSession, cat: IndexCatalog, op: str
+) -> tuple[dict, int, int]:
+    """(checkpoint rows, n_parts, n_shards) of the committed index an
+    upsert/delete mutates; refuses other format versions."""
+    meta = cat.read_meta() if os.path.exists(cat.meta_path) else None
+    if meta is not None:
+        check_format(meta, op)
     ckpt = _read_checkpoint_rows(spark, cat)
-    if not ckpt:
-        raise ValueError("no committed build to update (empty _checkpoints)")
+    if not ckpt or meta is None:
+        raise ValueError("no committed build to update (empty _checkpoints or no meta)")
     n_parts = int(next(iter(ckpt.values()))["n_parts"])
-    return ckpt, n_parts
+    return ckpt, n_parts, int(meta["n_shards"])
 
 
 def _merge_parts(
@@ -1230,23 +1035,18 @@ def _merge_parts(
     stage: str,
 ) -> None:
     """Rewrite the affected docs partitions from ``merged`` (already
-    filtered to ``parts``) and re-commit their checkpoint rows."""
+    filtered to ``parts``) and re-commit their checkpoint rows.  The
+    derived tables and postings are the caller's to refresh."""
     import os
     import shutil
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # materialize BEFORE overwriting the partitions the plan reads from
+    # materialize BEFORE overwriting the partitions the plan reads from;
+    # the fingerprint/stats aggregate reads the same materialized rows the
+    # write commits, so a part missing from it was emptied by a delete
     merged = merged.repartitionByRange(max(len(parts), 1), "part").localCheckpoint()
-    live = {int(r["part"]) for r in merged.select("part").distinct().collect()}
-    merged.write.mode("overwrite").partitionBy("part").parquet(cat.docs)
-    for p in sorted(set(parts) - live):  # partition emptied by a delete
-        shutil.rmtree(os.path.join(cat.docs, f"part={p}"), ignore_errors=True)
-        ckpt.pop(p, None)
-    if live:
+    try:
         agg = (
-            spark.read.parquet(cat.docs)
-            .filter(F.col("part").isin(sorted(live)))
-            .groupBy("part")
+            merged.groupBy("part")
             .agg(
                 F.bit_xor("h1").alias("hi"),
                 F.bit_xor("h2").alias("lo"),
@@ -1255,27 +1055,79 @@ def _merge_parts(
             )
             .collect()
         )
-        seq = time.time_ns()
-        for r in agg:
-            ckpt[int(r["part"])] = {
-                "part": int(r["part"]),
-                "hi": int(r["hi"]),
-                "lo": int(r["lo"]),
-                "n_docs": int(r["n_docs"]),
-                "sum_dl": int(r["sum_dl"]),
-                "n_parts": n_parts,
-                "seq": seq,
-                "secs": 0.0,
-            }
+        _overwrite(merged, "dynamic").partitionBy("part").parquet(cat.docs)
+    finally:
+        _release_checkpoint(merged)
+    live = {int(r["part"]) for r in agg}
+    for p in sorted(set(parts) - live):  # partition emptied by a delete
+        shutil.rmtree(os.path.join(cat.docs, f"part={p}"), ignore_errors=True)
+        ckpt.pop(p, None)
+    seq = time.time_ns()
+    for r in agg:
+        ckpt[int(r["part"])] = {
+            "part": int(r["part"]),
+            "hi": int(r["hi"]),
+            "lo": int(r["lo"]),
+            "n_docs": int(r["n_docs"]),
+            "sum_dl": int(r["sum_dl"]),
+            "n_parts": n_parts,
+            "seq": seq,
+            "secs": 0.0,
+        }
     _compact_checkpoints(cat, ckpt)
-    # maintain the derived similarity tables for the same partitions
-    if cat.exists("units") or cat.exists("simprints"):
-        build_derived(spark, cat, parts=parts)
     _append_metrics(
         cat,
         [{"run_id": run_id, "stage": stage, "part": p, "docs": 0, "secs": 0.0}
          for p in parts],
     )
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the RDD a ``localCheckpoint()`` pinned.  ``df.unpersist()``
+    cannot: the checkpoint is not in the cache manager, it is the RDD
+    behind the DataFrame's LogicalRDD leaf."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _refresh_shards_and_parts(
+    spark: SparkSession,
+    cat: IndexCatalog,
+    cfg: EngineConfig,
+    parts: list[int],
+    shards: list[int],
+    n_shards: int,
+    run_id: str,
+    rebuild_postings: bool,
+) -> None:
+    """After ``_merge_parts``: the derived-table refresh of ``parts`` runs
+    alongside stage B restricted to ``shards`` — both only read the
+    committed docs table, and every write sets its own overwrite mode."""
+    derived = None
+    if cat.exists("units") or cat.exists("simprints"):
+        derived = lambda: build_derived(spark, cat, parts=parts)  # noqa: E731
+    if rebuild_postings and shards:
+        _alongside(
+            lambda: build_postings(spark, cat, cfg, n_shards, run_id, shards=shards),
+            derived,
+        )
+    elif derived is not None:
+        derived()
+
+
+def _alongside(main, side=None):
+    """Run ``side`` on a worker thread while ``main`` runs here (guide-§2.6
+    overlap: one job's writes back-fill cores left idle by the other's
+    shuffle tail).  Returns main's result once both are done; a failure
+    of either is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    if side is None:
+        return main()
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        fut = pool.submit(side)
+        out = main()
+        fut.result()
+    return out
 
 
 def _dedupe_delta(pages: DataFrame) -> DataFrame:
@@ -1311,28 +1163,27 @@ def upsert_docs(
     pages: DataFrame,
     index_dir: str,
     cfg: EngineConfig = DEFAULT,
-    n_shards: int | None = None,
     run_id: str = "upsert",
     rebuild_postings: bool = True,
-    incremental: bool = True,
 ) -> list[int]:
     """Upsert a delta batch (url-keyed): replaces existing docs with the
-    same url, inserts new ones, touches ONLY the affected url-part dirs
-    (docs, units, simprints) and the affected doc-hash shards (postings) —
-    work scales with the delta + its shards, never the corpus.  Set
-    ``incremental=False`` to force a full stage-B rebuild instead.
+    same url, inserts new ones, and rewrites ONLY the affected url-part
+    dirs (docs, units, simprints, bands) and the doc-hash shards of the
+    changed docs (postings, re-encoded from docs by build_postings with
+    ``shards=``; see the section comment above).  A delta that touches
+    every shard re-encodes every shard — the full stage B.
     Returns the affected part list."""
     cat = IndexCatalog(index_dir)
-    if os.path.exists(cat.meta_path):
-        check_format(cat.read_meta(), "upsert_docs")
-    ckpt, n_parts = _require_ckpt_parts(spark, cat)
+    ckpt, n_parts, n_shards = _open_for_update(spark, cat, "upsert_docs")
     h1, h2 = _row_hash_cols()
     delta = _normalize_input(_dedupe_delta(pages)).withColumn(
         "part", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
     )
-    key_rows = delta.select("part", "doc_id").distinct().collect()
+    key_rows = (
+        delta.select("part", _shard_col(n_shards).alias("shard")).distinct().collect()
+    )
     parts = sorted({int(r["part"]) for r in key_rows})
-    changed_ids = sorted({int(r["doc_id"]) for r in key_rows})
+    shards = sorted({int(r["shard"]) for r in key_rows})
     # match the index's build mode: a lean (postings-only) index must not
     # gain a few derived-valued docs mid-stream
     tok = tok_tf_simhash_udf if cat.exists("units") else tok_tf_lean_udf
@@ -1361,12 +1212,9 @@ def upsert_docs(
         spark, cat, existing.unionByName(new_docs.select(*_DOC_COLS)),
         parts, ckpt, n_parts, run_id, "upsert",
     )
-    if rebuild_postings:
-        if incremental:
-            update_postings_incremental(spark, cat, cfg, changed_ids, parts, run_id)
-        else:
-            meta = cat.read_meta()
-            build_postings(spark, cat, cfg, n_shards or int(meta["n_shards"]), run_id)
+    _refresh_shards_and_parts(
+        spark, cat, cfg, parts, shards, n_shards, run_id, rebuild_postings
+    )
     return parts
 
 
@@ -1375,18 +1223,14 @@ def delete_docs(
     urls: list[str],
     index_dir: str,
     cfg: EngineConfig = DEFAULT,
-    n_shards: int | None = None,
     run_id: str = "delete",
     rebuild_postings: bool = True,
-    incremental: bool = True,
 ) -> list[int]:
     """Delete documents by url from the affected partitions, maintaining
     postings/units/simprints incrementally (see upsert_docs).  Returns the
     affected part list."""
     cat = IndexCatalog(index_dir)
-    if os.path.exists(cat.meta_path):
-        check_format(cat.read_meta(), "delete_docs")
-    ckpt, n_parts = _require_ckpt_parts(spark, cat)
+    ckpt, n_parts, n_shards = _open_for_update(spark, cat, "delete_docs")
     dead = spark.createDataFrame([(u,) for u in urls], "url string").withColumn(
         "part", F.pmod(F.xxhash64("url"), F.lit(n_parts)).cast("int")
     )
@@ -1395,10 +1239,11 @@ def delete_docs(
         spark.read.parquet(cat.docs)
         .filter(F.col("part").isin(parts))
         .join(dead.select("url"), "url", "left_semi")
-        .select("doc_id")
+        .select(_shard_col(n_shards).alias("shard"))
+        .distinct()
         .collect()
     )
-    changed_ids = sorted({int(r["doc_id"]) for r in affected})
+    shards = sorted(int(r["shard"]) for r in affected)
     kept = (
         spark.read.parquet(cat.docs)
         .filter(F.col("part").isin(parts))
@@ -1406,12 +1251,9 @@ def delete_docs(
         .select(*_DOC_COLS)
     )
     _merge_parts(spark, cat, kept, parts, ckpt, n_parts, run_id, "delete")
-    if rebuild_postings:
-        if incremental:
-            update_postings_incremental(spark, cat, cfg, changed_ids, parts, run_id)
-        else:
-            meta = cat.read_meta()
-            build_postings(spark, cat, cfg, n_shards or int(meta["n_shards"]), run_id)
+    _refresh_shards_and_parts(
+        spark, cat, cfg, parts, shards, n_shards, run_id, rebuild_postings
+    )
     return parts
 
 
@@ -1438,23 +1280,19 @@ def build_index(
         spark, pages, cat, cfg, n_parts, group_size, resume, run_id,
         derived=derived,
     )
-    if derived and not (skipped and cat.exists("units")):
-        # stage B (postings) and the full stage-C rebuild share nothing
-        # but the stage-A docs table — overlap them (guide-§2.6) so C's
-        # writes back-fill cores left idle by B's shuffle tail.  Both
-        # paths use the static committer, so the session-level
-        # partitionOverwriteMode setting cannot race.  The incremental
-        # refresh below stays serial (it flips the conf to dynamic).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            fut = pool.submit(build_derived, spark, cat, None, combo2)
-            res = build_postings(spark, cat, cfg, n_shards, run_id)
-            fut.result()
-    else:
-        res = build_postings(spark, cat, cfg, n_shards, run_id)
-        if derived:
-            # resume fast path: only newly-built parts need their derived
-            # partitions refreshed once the tables exist
-            build_derived(spark, cat, parts=built, combo2=combo2)
+    # stage B (postings) and stage C share nothing but the stage-A docs
+    # table — overlap them (guide-§2.6) so C's writes back-fill cores left
+    # idle by B's shuffle tail.  Every write sets its own overwrite mode,
+    # so the two cannot race on session conf.  On a resume that skipped
+    # parts of an index whose tables exist, only the newly-built parts'
+    # derived partitions are refreshed.
+    derived_job = None
+    if derived:
+        refresh = bool(skipped) and cat.exists("units")
+        derived_job = lambda: build_derived(  # noqa: E731
+            spark, cat, parts=built if refresh else None, combo2=combo2
+        )
+    res = _alongside(
+        lambda: build_postings(spark, cat, cfg, n_shards, run_id), derived_job
+    )
     return BuildResult(res.n_docs, res.avgdl, built, skipped, time.time() - t0)

@@ -67,7 +67,7 @@ def _shingles_expr(text_col: str, n: int):
     )).otherwise(F.array().cast("array<string>"))
 
 
-def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
+def _minhash_sig_udf(n_perm: int, ngram: int, seed: int, pack_limit: int = 2**62):
     """Arrow-batched text -> minhash signature (array of n_perm longs, or
     null for docs with no shingles).
 
@@ -78,7 +78,13 @@ def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
     + conv per occurrence, measured 83 s of CPU at 50k docs / 50M
     occurrences vs ~2 s here).  Shingles are factorized as integer
     token-code windows; the shingle STRING is only materialized once per
-    unique shingle to feed md5."""
+    unique shingle to feed md5.
+
+    A window packs into one int64 as ``code_0 * v^(ngram-1) + ...`` while
+    the batch vocabulary v satisfies ``v**ngram < pack_limit``; above it
+    the codes are refactorized after every step (``levels``) so the
+    packed value never overflows.  ``pack_limit`` is a parameter only so
+    tests can force that branch on a tiny vocabulary."""
     import numpy as np
 
     from iscc_search_spark.functions.hashing import (
@@ -123,7 +129,7 @@ def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
             - win_off[wdoc]
             + doc_off[wdoc]
         )
-        if ngram == 1 or float(v) ** ngram < 2**62:
+        if ngram == 1 or float(v) ** ngram < pack_limit:
             comb = codes[starts]
             for j in range(1, ngram):
                 comb = comb * v + codes[starts + j]
@@ -144,7 +150,7 @@ def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
         gu, ginv = np.unique(cb, return_inverse=True)
         if ngram == 1:
             strs = [uniq_tokens[int(g)] for g in gu]
-        elif float(v) ** ngram < 2**62:
+        elif float(v) ** ngram < pack_limit:
             strs = []
             for g in gu.tolist():
                 parts = []
@@ -155,6 +161,9 @@ def _minhash_sig_udf(n_perm: int, ngram: int, seed: int):
         else:
             strs = []
             for g in gu.tolist():
+                # g indexes levels[-1]; each level's value packs the
+                # previous level's index with the next token code
+                g = int(levels[-1][g])
                 parts = [uniq_tokens[g % v]]
                 g //= v
                 for lu in reversed(levels[:-1]):

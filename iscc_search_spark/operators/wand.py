@@ -84,33 +84,42 @@ class IndexReader:
     long-lived reader detects this via the meta.json mtime (one os.stat per
     query — the version check every query entry point calls) and reloads
     its caches, so serving processes never score with stale df/avgdl or
-    vanished part-files."""
+    vanished part-files.  A reload builds the new state in locals and
+    publishes it under a lock, mtime last: a concurrent query either sees
+    the old mtime (and waits for the reload) or the complete new state."""
 
     def __init__(self, spark: SparkSession, index_dir: str, cache_stats: bool = True):
+        import threading
+
         self.spark = spark
         self.cat = IndexCatalog(index_dir)
         self._cache_stats = cache_stats
+        self._reload_lock = threading.Lock()
         self._open()
 
     def _open(self) -> None:
         import os
 
-        self._meta_mtime = os.stat(self.cat.meta_path).st_mtime_ns
-        self.meta = self.cat.read_meta()
-        check_format(self.meta, "IndexReader")
-        self.n_docs = int(self.meta["n_docs"])
-        self.avgdl = float(self.meta["avgdl"])
-        self.k1 = float(self.meta["bm25"]["k1"])
-        self.b = float(self.meta["bm25"]["b"])
-        self.n_buckets = int(self.meta["term_buckets"])
-        self.blocks = self.spark.read.parquet(self.cat.postings)
-        self._stats: dict[str, int] | None = None
+        mtime = os.stat(self.cat.meta_path).st_mtime_ns
+        meta = self.cat.read_meta()
+        check_format(meta, "IndexReader")
+        stats = self._read_stats() if self._cache_stats else None
+        blocks = self.spark.read.parquet(self.cat.postings)
+        self.meta = meta
+        self.n_docs = int(meta["n_docs"])
+        self.avgdl = float(meta["avgdl"])
+        self.k1 = float(meta["bm25"]["k1"])
+        self.b = float(meta["bm25"]["b"])
+        self.n_buckets = int(meta["term_buckets"])
+        self.blocks = blocks
+        self._stats: dict[str, int] | None = stats
         self._pa_dataset = None  # lazy; (bucket, shard) dir listing is paid
         # once per open, NOT per local query (512 dirs cost ~70 ms to list)
-        self._bucket_cache: dict[int, pd.DataFrame] = {}
         self._bucket_cache_bytes = 0
-        if self._cache_stats:
-            self._load_stats()
+        # after _pa_dataset: a bucket_blocks call that sees this new cache
+        # also sees the reset dataset, so it never caches old-version files
+        self._bucket_cache: dict[int, pd.DataFrame] = {}
+        self._meta_mtime = mtime  # published last: the reload is complete
 
     def pa_dataset(self):
         if self._pa_dataset is None:
@@ -133,8 +142,9 @@ class IndexReader:
 
     def bucket_blocks(self, bucket: int):
         """pandas blocks of one bucket, cached (None if over budget)."""
-        if bucket in self._bucket_cache:
-            return self._bucket_cache[bucket]
+        cache = self._bucket_cache  # this version's cache, even mid-reload
+        if bucket in cache:
+            return cache[bucket]
         if self._bucket_cache_bytes >= self._BLOCK_CACHE_BYTES:
             return None
         import pyarrow.dataset as ds
@@ -144,26 +154,29 @@ class IndexReader:
         )
         pdf = t.to_pandas()
         self._bucket_cache_bytes += int(t.nbytes)
-        self._bucket_cache[bucket] = pdf
+        cache[bucket] = pdf
         return pdf
 
     def ensure_fresh(self) -> None:
-        """Reload caches if the index was updated since open (cheap stat)."""
+        """Reload caches if the index was updated since open (cheap stat;
+        lock-free while fresh, one reload per version under the lock)."""
         import os
 
-        if os.stat(self.cat.meta_path).st_mtime_ns != self._meta_mtime:
-            self._open()
+        path = self.cat.meta_path
+        if os.stat(path).st_mtime_ns == self._meta_mtime:
+            return
+        with self._reload_lock:
+            if os.stat(path).st_mtime_ns != self._meta_mtime:
+                self._open()
 
-    def _load_stats(self) -> None:
+    def _read_stats(self) -> dict[str, int] | None:
         import pyarrow.dataset as ds
 
         d = ds.dataset(self.cat.term_stats, format="parquet", partitioning="hive")
         if d.count_rows() > _STATS_CACHE_MAX_ROWS:
-            return
+            return None
         t = d.to_table(columns=["term", "df"])
-        self._stats = dict(
-            zip(t.column("term").to_pylist(), t.column("df").to_pylist())
-        )
+        return dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
 
     def term_dfs(self, terms: list[str]) -> dict[str, int]:
         """Exact df per term (cache hit = zero Spark jobs)."""

@@ -84,7 +84,8 @@ def stream_index_maintenance(
     """Streamed page updates applied to a LIVE index: each micro-batch of
     accepted rows becomes one incremental upsert txn (url-keyed; only the
     affected docs partitions, derived-table partitions and posting shards
-    rewrite — operators/build.py:update_postings_incremental).
+    rewrite — operators/build.py:upsert_docs, whose postings step is stage
+    B restricted to the changed docs' shards).
 
     Delivery semantics: checkpointLocation gives at-least-once batch
     replay; upsert_docs is idempotent per url (same content -> same docs

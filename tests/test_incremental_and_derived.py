@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import glob
 import os
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -216,15 +217,74 @@ def _posting_file_mtimes(cat: IndexCatalog) -> dict[str, float]:
     return out
 
 
-def test_upsert_touches_only_affected_shard(spark, pages_df, built):
-    cat = IndexCatalog(built)
-    before = _posting_file_mtimes(cat)
-    url = pages_df.select("url").orderBy("url").first()["url"]
-    delta = spark.createDataFrame(
-        [(url, "one tweaked doc " + "t00000 " * 10, "en")],
+def _stage_b_state(d: str) -> tuple[list[tuple], list[tuple]]:
+    """Every postings row (all columns, ordered by bucket, shard, term,
+    block_id) and every term_stats row (ordered by bucket, term)."""
+    import pyarrow.dataset as ds
+
+    cat = IndexCatalog(d)
+
+    def rows(path, key):
+        t = ds.dataset(path, format="parquet", partitioning="hive").to_table()
+        cols = sorted(t.column_names)
+        return sorted(
+            (tuple(r[c] for c in key) + tuple(r[c] for c in cols) for r in t.to_pylist())
+        )
+
+    return (
+        rows(cat.postings, ["bucket", "shard", "term", "block_id"]),
+        rows(cat.term_stats, ["bucket", "term"]),
+    )
+
+
+def _assert_equals_fresh_build(spark, d, corpus: dict[str, str], tmp_path):
+    """The maintained index's stage-B output equals a from-scratch build
+    of the final corpus, row for row."""
+    fresh = str(tmp_path / "fresh")
+    pages = spark.createDataFrame(
+        [(u, t, "en") for u, t in sorted(corpus.items())],
         "url string, text string, lang string",
     )
+    build_index(spark, pages, fresh, cfg=CFG, n_parts=8, n_shards=4,
+                group_size=8, resume=False, derived=False)
+    got_post, got_stats = _stage_b_state(d)
+    want_post, want_stats = _stage_b_state(fresh)
+    assert got_stats == want_stats
+    assert got_post == want_post
+
+
+def _corpus(pages_df) -> dict[str, str]:
+    return {r["url"]: r["text"] for r in pages_df.select("url", "text").collect()}
+
+
+def _shard_urls(spark, pages_df, n_shards: int = 4) -> dict[int, list[str]]:
+    from iscc_search_spark.functions.hashing import doc_id_udf
+
+    rows = (
+        pages_df.select("url", doc_id_udf("url").alias("doc_id"))
+        .select("url", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).alias("s"))
+        .orderBy("url")
+        .collect()
+    )
+    out: dict[int, list[str]] = {}
+    for r in rows:
+        out.setdefault(int(r["s"]), []).append(r["url"])
+    return out
+
+
+def test_upsert_touches_only_affected_shard(spark, pages_df, built, tmp_path):
+    """A 1-doc upsert and a 1-doc delete re-encode only their doc's
+    shard; the result equals a from-scratch build of the final corpus."""
+    cat = IndexCatalog(built)
+    corpus = _corpus(pages_df)
+    before = _posting_file_mtimes(cat)
+    url = pages_df.select("url").orderBy("url").first()["url"]
+    text = "one tweaked doc " + "t00000 " * 10
+    delta = spark.createDataFrame(
+        [(url, text, "en")], "url string, text string, lang string"
+    )
     upsert_docs(spark, delta, built, cfg=CFG)
+    corpus[url] = text
     after = _posting_file_mtimes(cat)
     changed_shards = {
         p.split("/")[1] for p in set(before) | set(after)
@@ -235,6 +295,67 @@ def test_upsert_touches_only_affected_shard(spark, pages_df, built):
     assert len(changed_shards) == 1
     untouched = {p for p in before if p.split("/")[1] not in changed_shards}
     assert untouched and all(before[p] == after[p] for p in untouched)
+
+    by_shard = _shard_urls(spark, pages_df)
+    dead = next(us[0] for _, us in sorted(by_shard.items()) if url not in us)
+    delete_docs(spark, [dead], built, cfg=CFG)
+    del corpus[dead]
+    _assert_equals_fresh_build(spark, built, corpus, tmp_path)
+
+
+def test_delta_touching_every_shard_equals_full_build(spark, pages_df, built, tmp_path):
+    corpus = _corpus(pages_df)
+    by_shard = _shard_urls(spark, pages_df)
+    assert sorted(by_shard) == [0, 1, 2, 3]
+    rows = [(us[0], corpus[us[0]] + " qqeveryshard", "en") for us in by_shard.values()]
+    rows.append(("http://x.test/brand-new", "qqeveryshard fresh words", "en"))
+    upsert_docs(
+        spark,
+        spark.createDataFrame(rows, "url string, text string, lang string"),
+        built,
+        cfg=CFG,
+    )
+    corpus.update({u: t for u, t, _ in rows})
+    _assert_equals_fresh_build(spark, built, corpus, tmp_path)
+
+
+def test_writes_leave_session_overwrite_mode_alone(spark, pages_df, tmp_path):
+    """Every write sets its own partition-overwrite mode; the caller's
+    session conf is never flipped (concurrent writers and servers share
+    one session)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prior = spark.conf.get(key)
+    d = str(tmp_path / "conf")
+    url = pages_df.select("url").orderBy("url").first()["url"]
+    delta = spark.createDataFrame(
+        [(url, "conf probe text", "en")], "url string, text string, lang string"
+    )
+    try:
+        spark.conf.set(key, "dynamic")
+        build_index(spark, pages_df.limit(40), d, cfg=CFG, n_parts=4,
+                    n_shards=4, group_size=4)
+        assert spark.conf.get(key) == "dynamic"
+        spark.conf.set(key, "static")
+        upsert_docs(spark, delta, d, cfg=CFG)
+        assert spark.conf.get(key) == "static"
+        delete_docs(spark, [url], d, cfg=CFG)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prior)
+
+
+def test_write_path_releases_pinned_rdds(spark, pages_df, built):
+    """upsert + delete unpersist their checkpoints and cached blocks: the
+    SparkContext's persistent RDD count is unchanged afterwards."""
+    jsc = spark.sparkContext._jsc
+    n0 = jsc.getPersistentRDDs().size()
+    url = pages_df.select("url").orderBy("url").first()["url"]
+    delta = spark.createDataFrame(
+        [(url, "pinned probe text", "en")], "url string, text string, lang string"
+    )
+    upsert_docs(spark, delta, built, cfg=CFG)
+    delete_docs(spark, [url], built, cfg=CFG)
+    assert jsc.getPersistentRDDs().size() == n0
 
 
 def test_delete_to_empty_bucket_drops_stale_blocks(spark, tmp_path):
@@ -287,6 +408,52 @@ def test_reader_invalidates_after_update(spark, pages_df, built):
     from iscc_search_spark.corpus import doc_id_for_url
 
     assert list(out["doc_id"]) == [doc_id_for_url(url)]
+
+
+def test_reader_reload_is_atomic_under_concurrent_queries(spark, pages_df, built):
+    """2 x nproc threads each send their FIRST query after an upsert to a
+    reader opened (and warmed) before it: every answer must equal the
+    oracle over the mutated corpus — no query may score with half-reloaded
+    stats or caches."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from iscc_search_spark.corpus import doc_id_for_url, generate_queries
+    from iscc_search_spark.operators.wand import IndexReader, bm25_wand_topk_local
+    from iscc_search_spark.oracle import build_oracle
+
+    n = 2 * (os.cpu_count() or 2)  # more threads than cores
+    queries = generate_queries(60)[:n]  # the OOV queries come last
+    r = IndexReader(spark, built)
+    for q in queries:  # warm the stats and bucket caches of the old version
+        bm25_wand_topk_local(r, q)
+    corpus = _corpus(pages_df)
+    urls = sorted(corpus)[:20]
+    rows = [(u, corpus[u] + " " + queries[i % len(queries)], "en")
+            for i, u in enumerate(urls)]
+    upsert_docs(
+        spark,
+        spark.createDataFrame(rows, "url string, text string, lang string"),
+        built,
+        cfg=CFG,
+    )
+    corpus.update({u: t for u, t, _ in rows})
+    oracle = build_oracle([(doc_id_for_url(u), t) for u, t in corpus.items()])
+    gate = threading.Barrier(len(queries))
+
+    def first_query(q):
+        gate.wait(timeout=60)
+        out = bm25_wand_topk_local(r, q)
+        return list(zip(out["doc_id"].tolist(), out["score"].tolist()))
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads' bytecode finely
+    try:
+        with ThreadPoolExecutor(len(queries)) as pool:
+            got = list(pool.map(first_query, queries, timeout=300))
+    finally:
+        sys.setswitchinterval(switch)
+    assert got == [oracle.search(q, k=10) for q in queries]
 
 
 # --- NPHD banded prune ---------------------------------------------------------

@@ -59,19 +59,16 @@ def test_bm25_onepass_matches_relational(docs):
         assert fast == slow  # dict equality: same docs, bit-equal floats
 
 
-def test_minhash_signatures_match_python_reference(docs):
-    """The factorized Arrow signature kernel must reproduce the frozen
-    h32/permutation/min semantics exactly."""
+def _minhash_reference(rows, n_perm: int, ngram: int, seed: int) -> dict:
+    """doc_id -> signature, straight from the frozen h32/permutation/min
+    definition (docs without shingles have no signature)."""
     from iscc_search_spark.functions.hashing import (
         MERSENNE_31,
         h32_py,
         minhash_params,
     )
-    from iscc_search_spark.operators.dedup import minhash_signatures
 
-    n_perm, ngram, seed = 16, 3, 42
     a, b = minhash_params(n_perm, seed)
-    rows = docs.collect()
     expect = {}
     for r in rows:
         toks = tokenize_py(r["text"])
@@ -86,11 +83,42 @@ def test_minhash_signatures_match_python_reference(docs):
             min((h * a[k] + b[k]) % MERSENNE_31 for h in hs)
             for k in range(n_perm)
         ]
+    return expect
+
+
+def test_minhash_signatures_match_python_reference(docs):
+    """The factorized Arrow signature kernel must reproduce the frozen
+    h32/permutation/min semantics exactly."""
+    from iscc_search_spark.operators.dedup import minhash_signatures
+
+    n_perm, ngram, seed = 16, 3, 42
+    expect = _minhash_reference(docs.collect(), n_perm, ngram, seed)
     got = {
         r["doc_id"]: [r[f"m{k}"] for k in range(n_perm)]
         for r in minhash_signatures(docs, ngram=ngram).collect()
     }
     assert got == expect
+
+
+@pytest.mark.parametrize("ngram", [2, 3, 4])
+def test_minhash_overflow_branch_matches_python_reference(spark, ngram):
+    """Force the refactorize-per-step branch (taken when vocabulary**ngram
+    reaches the int64 pack limit) on a tiny vocabulary: its decoded
+    shingles, and so the signatures, must equal the reference's."""
+    from iscc_search_spark.operators.dedup import _minhash_sig_udf
+
+    n_perm, seed = 16, 42
+    texts = ["a b c b c d c d b", "d c b a a b", "b b b c", "a", "c d a b c d"]
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    expect = _minhash_reference(df.collect(), n_perm, ngram, seed)
+    for limit in (1, 2**62):  # forced overflow branch, then the packed one
+        sig = _minhash_sig_udf(n_perm, ngram, seed, pack_limit=limit)
+        got = {
+            r["doc_id"]: r["s"]
+            for r in df.select("doc_id", sig("text").alias("s")).collect()
+            if r["s"] is not None
+        }
+        assert got == expect, limit
 
 
 def test_jaccard_verify_matches_python_reference(docs):
