@@ -203,7 +203,7 @@ def main() -> None:
             "a7_granular_combo2_persisted",
             lambda: granular_topk(
                 None, GRANULAR_QUERY_TEXT, k=10, max_hamming=12,
-                bands2=load_simprint_bands2(spark, docs_idx),
+                bands2=load_simprint_bands2(spark, docs_idx), simprints=sp,
             ).collect(),
         )
         if rnd == 0:  # prune selectivity is data-deterministic — once

@@ -1359,12 +1359,17 @@ SELECT CAST(rank AS BIGINT) AS rank, doc_id, round(score, 6) AS score, n_matched
     # what this gate evidences is that the combo2 lookup path admits the
     # same matches while fetching ~40x fewer candidates
     def a7_combo2(spark, sf):
-        from iscc_search_spark.operators.build import load_simprint_bands2
+        from iscc_search_spark.operators.build import (
+            load_simprint_bands2,
+            load_simprints,
+        )
         from iscc_search_spark.operators.simprints import granular_topk
 
-        sb2 = load_simprint_bands2(spark, _built_index(spark, sf))
+        idx = _built_index(spark, sf)
         out = granular_topk(
-            None, GRANULAR_QUERY, k=10, max_hamming=12, bands2=sb2
+            None, GRANULAR_QUERY, k=10, max_hamming=12,
+            bands2=load_simprint_bands2(spark, idx),
+            simprints=load_simprints(spark, idx),
         )
         return out.withColumn("score", F.round("score", 6))
 

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from iscc_search_spark.operators.neardup import simhash_bands
+
 
 def _dot_expr(a, b):
     """Index-ordered float64 dot product of two array columns."""
@@ -101,27 +103,6 @@ def rph_signature_udf(dim: int, n_planes: int = 64, seed: int = 42):
     return sig
 
 
-def _sig_bands(with_sig: DataFrame, n_bands: int) -> DataFrame:
-    """(vec_id, band, key) band slices of the 64-bit RPH signature column
-    ``s`` — ONE scan of the signature relation (and ONE evaluation of the
-    signature UDF): the n_bands rows per vector come from a JVM explode
-    of struct literals, not n_bands unioned re-selects."""
-    width = 64 // n_bands
-    mask = (1 << width) - 1
-    entries = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned("s", b * width)
-            .bitwiseAND(F.lit(mask))
-            .alias("key"),
-        )
-        for b in range(n_bands)
-    ]
-    return with_sig.select(
-        "vec_id", F.explode(F.array(*entries)).alias("e")
-    ).select("vec_id", F.col("e.band").alias("band"), F.col("e.key").alias("key"))
-
-
 def embedding_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -148,7 +129,7 @@ def embedding_neardup_pairs(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"),
         sig(vec_col).alias("s"),
     )
-    bands = _sig_bands(with_sig, n_bands)
+    bands = simhash_bands(with_sig, "s", n_bands, id_col="vec_id")
     l, r = bands.alias("l"), bands.alias("r")
     cand = (
         l.join(
@@ -337,7 +318,7 @@ def rph_ann_topk(
     with_sig = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"), sig(vec_col).alias("s")
     )
-    bands = _sig_bands(with_sig, n_bands)
+    bands = simhash_bands(with_sig, "s", n_bands, id_col="vec_id")
     qb = bands.filter(F.col("vec_id") == query_vec_id).select("band", "key")
     cand_ids = (
         bands.join(F.broadcast(qb), ["band", "key"])

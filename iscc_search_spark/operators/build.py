@@ -656,19 +656,15 @@ def load_simprint_bands2(spark: SparkSession, index_dir: str) -> DataFrame:
     two-band ~18-bit keys over the 128-bit simprint; exact recall for
     max_hamming <= 12).
 
-    format_version 5 stores no hash limbs in this table; the returned
-    DataFrame carries the simprints source on ``_iscc_simprints`` so
-    granular_topk can join simhash/sh_lo back AFTER the keyed candidate
-    prune (k-row scale), keeping the 91x write volume minimal."""
+    format_version 5 stores no hash limbs in this table, keeping the 91x
+    write volume minimal: pass ``load_simprints`` as granular_topk's
+    ``simprints=`` too, so it joins simhash/sh_lo back AFTER the keyed
+    candidate prune (k-row scale)."""
     cat = IndexCatalog(index_dir)
     check_format(cat.read_meta(), "load_simprint_bands2")
-    df = spark.read.parquet(cat.simprint_bands2).select(
+    return spark.read.parquet(cat.simprint_bands2).select(
         "doc_id", "seg_idx", "band", "key"
     )
-    df._iscc_simprints = load_simprints(spark, index_dir).select(
-        "doc_id", "seg_idx", "simhash", "sh_lo"
-    )
-    return df
 
 
 # --- stage B: derived postings ------------------------------------------------

@@ -345,7 +345,9 @@ def granular_topk(
     as C(bands2_n, 2) two-band-combo keys) for the HIGH-threshold
     serving path: same keyed-lookup shape but each key carries two
     bands' bits, admitting ~40x fewer random collisions; recall stays
-    exact for max_hamming <= bands2_n - 2."""
+    exact for max_hamming <= bands2_n - 2.  A slim ``bands2`` (no hash
+    limbs, format_version 5) needs ``simprints`` as well: the limbs are
+    joined back from it after the keyed prune."""
     if bands2 is not None:
         if max_hamming > bands2_n - 2:
             raise ValueError(
@@ -394,22 +396,22 @@ def granular_topk(
         cands = bands2.join(F.broadcast(q), ["band", "key"])
         if "simhash" not in bands2.columns:
             # format_version-5 slim table: the hash limbs live only in
-            # the simprints table (attached by load_simprint_bands2).
-            # Dedup the candidate (doc, seg, q_seg) triples FIRST —
-            # hamming is a pure function of the triple, so deduping
-            # before the verify is result-identical — then join the
-            # limbs back at k-row scale.
-            sp_src = getattr(bands2, "_iscc_simprints", None)
-            if sp_src is None:
+            # the simprints table.  Dedup the candidate (doc, seg, q_seg)
+            # triples FIRST — hamming is a pure function of the triple,
+            # so deduping before the verify is result-identical — then
+            # join the limbs back at k-row scale.
+            if simprints is None:
                 raise ValueError(
-                    "bands2 has no simhash/sh_lo columns and no attached "
-                    "_iscc_simprints source; load it via "
-                    "load_simprint_bands2"
+                    "bands2 has no simhash/sh_lo columns; pass the "
+                    "simprints table (load_simprints) as simprints="
                 )
             cands = (
                 cands.select("doc_id", "seg_idx", "q_seg", "q_hi", "q_lo")
                 .dropDuplicates(["doc_id", "seg_idx", "q_seg"])
-                .join(sp_src, ["doc_id", "seg_idx"])
+                .join(
+                    simprints.select("doc_id", "seg_idx", "simhash", "sh_lo"),
+                    ["doc_id", "seg_idx"],
+                )
             )
     elif bands is not None:
         widths = band_widths(bands_n, SIMPRINT_BITS)

@@ -140,6 +140,7 @@ class SearchIndex:
             return granular_topk(
                 None, query_text, k=k, max_hamming=max_hamming,
                 bands2=load_simprint_bands2(self.spark, self.cat.root),
+                simprints=self.simprints(),
             )
         return granular_topk(
             None, query_text, k=k, max_hamming=max_hamming,

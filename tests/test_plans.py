@@ -147,7 +147,7 @@ def test_lsh_band_generation_is_one_scan(spark):
     must generate its (band, key) rows from a JVM explode over ONE scan of
     the source relation — n_bands unioned re-selects re-scan the source
     (and re-run the signature UDF) once per band."""
-    from iscc_search_spark.operators.ann import _sig_bands, rph_signature_udf
+    from iscc_search_spark.operators.ann import rph_signature_udf
     from iscc_search_spark.operators.dedup import lsh_candidate_pairs
     from iscc_search_spark.operators.neardup import simhash_bands
 
@@ -171,6 +171,21 @@ def test_lsh_band_generation_is_one_scan(spark):
     )
     sig = rph_signature_udf(2, 64, 42)
     with_sig = emb.select("vec_id", F.col("embedding").alias("v"), sig("embedding").alias("s"))
-    p = plan_of(_sig_bands(with_sig, n_bands=16))
+    p = plan_of(simhash_bands(with_sig, "s", n_bands=16, id_col="vec_id"))
     assert "Union" not in p and "explode(array(struct" in p
     assert p.count("+- ArrowEvalPython") == 1  # signature UDF runs once
+
+
+def test_simhash_neardup_has_no_aggregate_after_kernel(spark):
+    """The near-dup kernel emits each pair once (from its first shared
+    band), so nothing aggregates its output: no distinct above the
+    FlatMapGroupsInPandas.  The bucket-size aggregate below it stays."""
+    from iscc_search_spark.operators.neardup import simhash_neardup_pairs
+
+    sh = spark.createDataFrame(
+        [(1, 12345), (2, -9876)], "doc_id long, simhash long"
+    )
+    tree = plan_of(simhash_neardup_pairs(sh, max_hamming=6)).split("\n\n")[0]
+    above, kernel, below = tree.partition("FlatMapGroupsInPandas")
+    assert kernel and "Aggregate" in below
+    assert "Aggregate" not in above and "Exchange" not in above
