@@ -12,22 +12,28 @@ iscc_search/indexes/usearch/index.py:735-881 — see SURVEY.md §3.1):
    bucket-pruned Spark lookup — and compute idf driver-side in float64 libm;
 3. scan only the query terms' posting blocks (partition pruning on the
    bucket dir + parquet row-group stats on ``term``);
-4. per shard, a vectorized numpy scorer decodes surviving blocks and
-   accumulates per-doc scores in ascending-term order (bit-identical to
-   the oracle's accumulation);
-5. block-max pruning: a block B of term t is skipped iff
+4. per shard, ONE numpy kernel (``_shard_scorer``) scores a query batch:
+   it decodes every block once into a dense candidate-doc space and
+   accumulates each query's per-doc scores term-at-a-time in ascending
+   term order (bit-identical to the oracle's accumulation);
+5. block-max pruning per query signature: a block B of term t is skipped iff
        idf_t * block_max(B) + sum_{t' != t} U_t'  <  theta
-   where U_t' is term t's global max impact and theta is a lower bound on
+   where U_t' is the max impact of term t' and theta is a lower bound on
    the k-th best total score (bootstrapped from the exact contributions of
    the rarest term's postings).  Any doc in a skipped block has true score
    < theta, so pruning is EXACT — the WAND invariant (SURVEY.md §7.5 #3);
 6. per-shard top-k (tie-break (-score, doc_id), the analogue of the
-   reference's (-score, iscc_id_body), lmdb_ops.py:249) then global
-   TakeOrderedAndProject merge.
+   reference's (-score, iscc_id_body), lmdb_ops.py:249) then a global
+   merge.
 
-A single query is ONE Spark job end-to-end (stats cached, blocks scanned
-once); the doc-sharded layout means each shard scores its own disjoint doc
-set with complete information — no cross-shard traffic except the final
+The three entry points share the query prep and the kernel: a single
+query (``bm25_wand_topk``) is a batch of one merged by one
+TakeOrderedAndProject; the driver-local fast path
+(``bm25_wand_topk_local``) runs the kernel once over the whole candidate
+set, zero Spark jobs; ``bm25_wand_topk_batch`` merges per query_id.
+A query is ONE Spark job end-to-end (stats cached, blocks scanned once);
+the doc-sharded layout means each shard scores its own disjoint doc set
+with complete information — no cross-shard traffic except the final
 k-row merge (the classic distributed-search fan-out; scales to 1000
 executors by raising n_shards).
 """
@@ -88,12 +94,11 @@ class IndexReader:
     publishes it under a lock, mtime last: a concurrent query either sees
     the old mtime (and waits for the reload) or the complete new state."""
 
-    def __init__(self, spark: SparkSession, index_dir: str, cache_stats: bool = True):
+    def __init__(self, spark: SparkSession, index_dir: str):
         import threading
 
         self.spark = spark
         self.cat = IndexCatalog(index_dir)
-        self._cache_stats = cache_stats
         self._reload_lock = threading.Lock()
         self._open()
 
@@ -103,7 +108,7 @@ class IndexReader:
         mtime = os.stat(self.cat.meta_path).st_mtime_ns
         meta = self.cat.read_meta()
         check_format(meta, "IndexReader")
-        stats = self._read_stats() if self._cache_stats else None
+        stats = self._read_stats()
         blocks = self.spark.read.parquet(self.cat.postings)
         self.meta = meta
         self.n_docs = int(meta["n_docs"])
@@ -219,89 +224,165 @@ def _as_reader(spark: SparkSession, index: str | IndexReader) -> IndexReader:
     return index if isinstance(index, IndexReader) else IndexReader(spark, index)
 
 
+def _query_idf(
+    r: IndexReader, queries: dict[int, str]
+) -> tuple[dict[str, int], dict[int, dict[str, float]]]:
+    """Query prep shared by every entry point: tokenize, exact df, idf.
+
+    Returns (df per indexed query term, {query_id: {term: idf}}); queries
+    with no indexed term are dropped, so an empty map means no answer."""
+    r.ensure_fresh()
+    q_terms = {qid: sorted(set(tokenize_py(q))) for qid, q in queries.items()}
+    all_terms = sorted({t for ts in q_terms.values() for t in ts})
+    if not all_terms or r.n_docs == 0:
+        return {}, {}
+    term_df = r.term_dfs(all_terms)
+    idf = r.idf(term_df)
+    query_idf = {
+        qid: {t: idf[t] for t in ts if t in idf} for qid, ts in q_terms.items()
+    }
+    return term_df, {qid: m for qid, m in query_idf.items() if m}
+
+
 def _decode_term_blocks(
     g: pd.DataFrame, k1: float, b: float, avgdl: float
-) -> list[tuple[float, np.ndarray, np.ndarray]]:
-    """One term's blocks -> [(block_max, doc_ids, tfnorm)].
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """One term's blocks -> (block_max, block_len, doc_ids, tfnorm), the
+    last two concatenated over the blocks in stored order.
 
     The block upper bound is computed HERE from the stored (max_tf, min_dl)
     metadata under the CURRENT corpus avgdl: tfnorm is increasing in tf and
     decreasing in dl, so tfnorm(max_tf, min_dl) dominates every posting in
     the block for any avgdl — which is what keeps incremental upserts (that
     shift avgdl) from invalidating untouched blocks."""
-    out = []
+    bms, ids, tfns = [], [], []
     for n, min_doc, doc_buf, tf_buf, dl_buf, mtf, mdl in zip(
         g["n"], g["min_doc"], g["doc_ids"], g["tfs"], g["dls"],
         g["max_tf"].to_numpy(), g["min_dl"].to_numpy(),
     ):
         n = int(n)
-        d = decode_block_ids(int(min_doc), n, doc_buf)
+        ids.append(decode_block_ids(int(min_doc), n, doc_buf))
         tf = codec.for_unpack(tf_buf, n).view(np.int64).astype(np.float64)
         dl = codec.for_unpack(dl_buf, n).view(np.int64).astype(np.float64)
-        tfnorm = (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        bm = (float(mtf) * (k1 + 1.0)) / (
-            float(mtf) + k1 * (1.0 - b + b * float(mdl) / avgdl)
+        tfns.append((tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl)))
+        bms.append(
+            (float(mtf) * (k1 + 1.0))
+            / (float(mtf) + k1 * (1.0 - b + b * float(mdl) / avgdl))
         )
-        out.append((bm, d, tfnorm))
-    return out
+    lens = g["n"].to_numpy(np.int64)
+    return np.array(bms), lens, np.concatenate(ids), np.concatenate(tfns)
 
 
-def _shard_scorer(idf: dict[str, float], k1: float, b: float, avgdl: float, k: int):
-    """Per-shard vectorized scorer (applyInPandas)."""
-    terms_sorted = sorted(idf)
+def _shard_scorer(
+    query_idf: dict[int, dict[str, float]], k1: float, b: float, avgdl: float, k: int
+):
+    """Per-shard scorer (applyInPandas) for a query batch — the only BM25
+    scorer over postings; a single query is a batch of one, ``{0: idf}``.
+
+    Dense-accumulator term-at-a-time (TAAT): every posting block of every
+    requested term is decoded exactly once and ALIGNED once into the
+    shard's dense candidate-doc space (position array + tfnorm array per
+    term); each query is then a handful of fancy-indexed adds into a dense
+    accumulator plus one top-k partition.  Queries with IDENTICAL (term,
+    idf) signatures are scored once and fanned out.
+
+    Block-max pruning, per signature: a block B of term t is skipped iff
+        idf_t * block_max(B) + sum_{t' != t} U_t'  <  theta - eps
+    where U_t' is the max impact of term t' in the shard, theta a lower
+    bound on the shard's k-th best total score, bootstrapped from the
+    exact single-term contributions of the signature's rarest term.  Any
+    doc in a skipped block has true score < theta, so every doc of the
+    true top k is fully accumulated and the pruning is EXACT — the WAND
+    invariant (SURVEY.md §7.5 #3); the epsilon guard keeps the
+    float-rounded bound strictly conservative.
+
+    Result-identity: scores accumulate per doc in ascending term order
+    (the oracle's ordered sum), so outputs are bit-identical to the oracle.
+    The dense accumulator is sized by the shard's CANDIDATE doc count,
+    which shard sizing bounds (a shard is never the corpus).
+    """
 
     def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term: dict[str, pd.DataFrame] = {
-            t: g for t, g in pdf.groupby("term", sort=False)
+        terms = {
+            t: _decode_term_blocks(g, k1, b, avgdl)
+            for t, g in pdf.groupby("term", sort=False)
         }
-        present = [t for t in terms_sorted if t in by_term]
-        if not present:
-            return pd.DataFrame({"doc_id": np.empty(0, np.int64), "score": np.empty(0, np.float64)})
+        # dense shard candidate space: union of all batch terms' doc ids
+        all_ids = np.unique(
+            np.concatenate(
+                [np.empty(0, np.int64)] + [d for _, _, d, _ in terms.values()]
+            )
+        )
+        pos = {t: np.searchsorted(all_ids, d) for t, (_, _, d, _) in terms.items()}
+        top_bm = {t: float(bms.max()) for t, (bms, _, _, _) in terms.items()}
 
-        decoded = {t: _decode_term_blocks(by_term[t], k1, b, avgdl) for t in present}
-        u = {t: idf[t] * max(bm for bm, _, _ in decoded[t]) for t in present}
-        sum_u = sum(u.values())
+        sig_qids: dict[tuple, list[int]] = {}
+        for qid, idf in query_idf.items():
+            present = tuple(sorted(t for t in idf if t in terms))
+            if present:
+                sig = (present, tuple(idf[t] for t in present))
+                sig_qids.setdefault(sig, []).append(qid)
 
-        # theta bootstrap: exact single-term contributions of the rarest term
-        # (fewest postings in this shard) are lower bounds on totals
-        theta = -np.inf
-        if len(present) > 1 and k > 0:
-            rarest = min(present, key=lambda t: sum(len(d) for _, d, _ in decoded[t]))
-            s0 = np.concatenate([idf[rarest] * tn for _, _, tn in decoded[rarest]])
-            if len(s0) >= k:
-                theta = float(np.partition(s0, -k)[-k])
+        acc = np.zeros(len(all_ids), dtype=np.float64)
+        out_qid = [np.empty(0, np.int64)]
+        out_doc = [np.empty(0, np.int64)]
+        out_score = [np.empty(0, np.float64)]
+        for (present, idfs), qids in sig_qids.items():
+            w = dict(zip(present, idfs))
+            u = {t: w[t] * top_bm[t] for t in present}
+            sum_u = sum(u.values())
+            theta = -np.inf
+            if len(present) > 1 and k > 0:
+                rarest = min(present, key=lambda t: len(pos[t]))
+                s0 = w[rarest] * terms[rarest][3]
+                if len(s0) >= k:
+                    theta = float(np.partition(s0, -k)[-k])
+            eps = 1e-9 * (1.0 + abs(theta)) if np.isfinite(theta) else 0.0
 
-        # block-max pruning (exact; the epsilon guard keeps the float-rounded
-        # bound strictly conservative vs ordered true sums)
-        eps = 1e-9 * (1.0 + abs(theta)) if np.isfinite(theta) else 0.0
-        all_ids: list[np.ndarray] = []
-        all_scores: list[np.ndarray] = []
-        for t in present:  # ascending term order -> ordered accumulation
-            min_bm = -np.inf
-            if np.isfinite(theta) and idf[t] > 0:
-                # keep block iff idf_t*bm + rest >= theta - eps
-                min_bm = (theta - eps - (sum_u - u[t])) / idf[t]
-            ids_parts = [d for bm, d, _ in decoded[t] if bm >= min_bm]
-            s_parts = [idf[t] * tn for bm, _, tn in decoded[t] if bm >= min_bm]
-            if ids_parts:
-                all_ids.append(np.concatenate(ids_parts))
-                all_scores.append(np.concatenate(s_parts))
+            acc[:] = 0.0
+            for t in present:  # ascending-term order -> ordered accumulation
+                bms, lens, _, tfn = terms[t]
+                p = pos[t]
+                if np.isfinite(theta) and w[t] > 0:
+                    # keep block iff idf_t*bm + rest >= theta - eps
+                    keep = bms >= (theta - eps - (sum_u - u[t])) / w[t]
+                    if not keep.all():
+                        mask = np.repeat(keep, lens)
+                        p, tfn = p[mask], tfn[mask]
+                acc[p] += w[t] * tfn
+            touched = np.flatnonzero(acc)
+            kk = min(k, len(touched))
+            if kk < 1:
+                continue
+            scores = acc[touched]
+            docs = all_ids[touched]
+            if len(touched) > kk:
+                # pre-cut with an O(n) partition before the O(n log n)
+                # lexsort (the measured per-query hotspot); keeping every
+                # boundary-score tie preserves the exact (score desc,
+                # doc asc) order of the full sort
+                thresh = np.partition(scores, len(scores) - kk)[len(scores) - kk]
+                cand = np.flatnonzero(scores >= thresh)
+                docs, scores = docs[cand], scores[cand]
+            order = np.lexsort((docs, -scores))[:kk]
+            top_docs, top_scores = docs[order], scores[order]
+            for qid in qids:
+                out_qid.append(np.full(kk, qid, dtype=np.int64))
+                out_doc.append(top_docs)
+                out_score.append(top_scores)
 
-        if not all_ids:
-            return pd.DataFrame({"doc_id": np.empty(0, np.int64), "score": np.empty(0, np.float64)})
-        flat_ids = np.concatenate(all_ids)
-        uniq = np.unique(flat_ids)
-        acc = np.zeros(len(uniq), dtype=np.float64)
-        for ids, s in zip(all_ids, all_scores):  # term order preserved
-            if len(ids):
-                acc[np.searchsorted(uniq, ids)] += s
-
-        kk = min(k, len(uniq))
-        order = np.lexsort((uniq, -acc))[:kk]
-        return pd.DataFrame({"doc_id": uniq[order], "score": acc[order]})
+        return pd.DataFrame(
+            {
+                "query_id": np.concatenate(out_qid),
+                "doc_id": np.concatenate(out_doc),
+                "score": np.concatenate(out_score),
+            }
+        )
 
     return score
 
+
+_SCORES = "query_id long, doc_id long, score double"
 
 # a single query whose terms together touch at most this many postings is
 # answered driver-side (pyarrow row-group-pruned read + the same numpy
@@ -317,30 +398,16 @@ def bm25_wand_topk_local(
 ) -> pd.DataFrame:
     """(rank, doc_id, score) pandas result, ZERO Spark jobs.
 
-    Bit-identical to the distributed scorer: per-doc accumulation runs in
-    the same ascending-term order (sharding only partitions docs; each
-    doc's sum is unchanged), block-max pruning uses the same exact bound.
-    Queries whose candidate postings exceed _LOCAL_POSTINGS_CAP fall back
-    to the distributed scorer (same result, executor-side memory).
+    Bit-identical to the distributed path: the whole candidate set scores
+    as ONE "shard" through the same kernel (sharding only partitions docs;
+    each doc's term-ordered sum is unchanged).  Queries whose candidate
+    postings exceed _LOCAL_POSTINGS_CAP fall back to the distributed
+    scorer (same result, executor-side memory).
     """
     r = index
-    r.ensure_fresh()
-    empty = pd.DataFrame(
-        {
-            "rank": pd.Series([], dtype="int64"),
-            "doc_id": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-        }
-    )
-    terms = sorted(set(tokenize_py(query)))
-    if not terms or r.n_docs == 0:
-        return empty
-    term_df = r.term_dfs(terms)
-    if not term_df:
-        return empty
+    term_df, query_idf = _query_idf(r, {0: query})
     if sum(term_df.values()) > _LOCAL_POSTINGS_CAP:
         return bm25_wand_topk(r.spark, r, query, k).toPandas()
-    idf = r.idf(term_df)
 
     buckets = sorted({_bucket_of(t, r.n_buckets) for t in term_df})
     parts: list[pd.DataFrame] = []
@@ -362,15 +429,14 @@ def bm25_wand_topk_local(
             .to_table(columns=IndexReader._BLOCK_COLS, filter=flt)
             .to_pandas()
         )
-    pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
-    if len(pdf) == 0:
-        return empty
-    # the whole candidate set scores as ONE "shard": per-doc sums are
-    # term-ordered exactly as in the per-shard scorer, so results are
-    # bit-identical to the distributed path's global merge
-    out = _shard_scorer(idf, r.k1, r.b, r.avgdl, k)((None,), pdf)
-    out = out.sort_values(["score", "doc_id"], ascending=[False, True], kind="stable")
-    out = out.head(k).reset_index(drop=True)
+    pdf = (
+        pd.concat(parts, ignore_index=True)
+        if parts
+        else pd.DataFrame(columns=IndexReader._BLOCK_COLS)
+    )
+    # one query = one signature: the kernel's rows are its top k, in order
+    out = _shard_scorer(query_idf, r.k1, r.b, r.avgdl, k)((None,), pdf)
+    out = out.drop(columns="query_id")
     out.insert(0, "rank", np.arange(1, len(out) + 1, dtype=np.int64))
     return out
 
@@ -384,136 +450,19 @@ def bm25_wand_topk(
     """(rank, doc_id, score) top-k; pass an IndexReader to amortize the
     index open (meta + stats cache + file listing) across queries."""
     r = _as_reader(spark, index)
-    r.ensure_fresh()
-    empty = spark.createDataFrame([], "rank long, doc_id long, score double")
-    terms = sorted(set(tokenize_py(query)))
-    if not terms or r.n_docs == 0:
-        return empty
-    term_df = r.term_dfs(terms)
-    if not term_df:
-        return empty
-    idf = r.idf(term_df)
+    term_df, query_idf = _query_idf(r, {0: query})
+    if not query_idf:
+        return spark.createDataFrame([], "rank long, doc_id long, score double")
 
     blocks = r.candidate_blocks(sorted(term_df))
     local_topk = blocks.groupBy("shard").applyInPandas(
-        _shard_scorer(idf, r.k1, r.b, r.avgdl, k), "doc_id long, score double"
+        _shard_scorer(query_idf, r.k1, r.b, r.avgdl, k), _SCORES
     )
     topk = local_topk.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return topk.withColumn("rank", F.row_number().over(w).cast("long")).select(
         "rank", "doc_id", "score"
     )
-
-
-def _batch_shard_scorer(
-    query_idf: dict[int, dict[str, float]], k1: float, b: float, avgdl: float, k: int
-):
-    """Per-shard scorer for a query BATCH — dense-accumulator TAAT.
-
-    Every posting block of every requested term is decoded exactly once
-    and ALIGNED once into the shard's dense candidate-doc space (position
-    array + tfnorm array per term); each query is then a handful of
-    fancy-indexed adds into a dense accumulator plus one top-k partition
-    — no per-query unique/searchsorted/concatenate (the round-3 version
-    replicated ~30 small-array numpy calls per (query, shard), which made
-    batch throughput scale with shard count instead of core count).
-    Queries with IDENTICAL (term, idf) signatures are scored once and
-    fanned out (real query logs are duplicate-heavy; results are exact
-    either way).
-
-    Result-identity: scores accumulate per doc in ascending term order —
-    the same ordered-sum discipline as before — so outputs are
-    bit-identical to the round-3 scorer and to the single-query WAND path
-    (which keeps block-max pruning: pruning pays off at one query per
-    job, not when a batch shares the decode).  The dense accumulator is
-    sized by the shard's CANDIDATE doc count, which shard sizing bounds
-    (shards scale with corpus at 10^12 docs; a shard is never the corpus).
-    This amortizes parquet scan + Arrow transfer + decode across the
-    whole query batch — the serving-path answer to the reference's
-    per-query LMDB cursor reuse (lmdb/index.py:395-445).
-    """
-
-    def score(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded = {
-            t: _decode_term_blocks(g, k1, b, avgdl)
-            for t, g in pdf.groupby("term", sort=False)
-        }
-        if not decoded:
-            return pd.DataFrame(
-                {
-                    "query_id": np.empty(0, np.int64),
-                    "doc_id": np.empty(0, np.int64),
-                    "score": np.empty(0, np.float64),
-                }
-            )
-        # dense shard candidate space: union of all batch terms' doc ids
-        all_ids = np.unique(
-            np.concatenate(
-                [d for blocks in decoded.values() for _, d, _ in blocks]
-            )
-        )
-        term_pos: dict[str, np.ndarray] = {}
-        term_tfn: dict[str, np.ndarray] = {}
-        for t, blocks in decoded.items():
-            ids = np.concatenate([d for _, d, _ in blocks])
-            term_pos[t] = np.searchsorted(all_ids, ids)
-            term_tfn[t] = np.concatenate([tn for _, _, tn in blocks])
-
-        # dedupe identical (terms, idfs) signatures across the batch
-        sig_qids: dict[tuple, list[int]] = {}
-        for qid, idf in query_idf.items():
-            present = tuple(sorted(t for t in idf if t in decoded))
-            if not present:
-                continue
-            sig = (present, tuple(idf[t] for t in present))
-            sig_qids.setdefault(sig, []).append(qid)
-
-        acc = np.zeros(len(all_ids), dtype=np.float64)
-        out_qid: list[np.ndarray] = []
-        out_doc: list[np.ndarray] = []
-        out_score: list[np.ndarray] = []
-        for (present, idfs), qids in sig_qids.items():
-            acc[:] = 0.0
-            for t, w_t in zip(present, idfs):  # ascending-term order
-                acc[term_pos[t]] += w_t * term_tfn[t]
-            touched = np.flatnonzero(acc)
-            if not len(touched):
-                continue
-            scores = acc[touched]
-            docs = all_ids[touched]
-            kk = min(k, len(touched))
-            if len(touched) > kk:
-                # pre-cut with an O(n) partition before the O(n log n)
-                # lexsort (the measured per-query hotspot); keeping every
-                # boundary-score tie preserves the exact (score desc,
-                # doc asc) order of the full sort
-                thresh = np.partition(scores, len(scores) - kk)[len(scores) - kk]
-                cand = np.flatnonzero(scores >= thresh)
-                docs, scores = docs[cand], scores[cand]
-            order = np.lexsort((docs, -scores))[:kk]
-            top_docs, top_scores = docs[order], scores[order]
-            for qid in qids:
-                out_qid.append(np.full(kk, qid, dtype=np.int64))
-                out_doc.append(top_docs)
-                out_score.append(top_scores)
-
-        if not out_qid:
-            return pd.DataFrame(
-                {
-                    "query_id": np.empty(0, np.int64),
-                    "doc_id": np.empty(0, np.int64),
-                    "score": np.empty(0, np.float64),
-                }
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_qid),
-                "doc_id": np.concatenate(out_doc),
-                "score": np.concatenate(out_score),
-            }
-        )
-
-    return score
 
 
 def bm25_wand_topk_batch(
@@ -529,30 +478,15 @@ def bm25_wand_topk_batch(
     small shuffle on query_id.
     """
     r = _as_reader(spark, index)
-    r.ensure_fresh()
-    empty = spark.createDataFrame(
-        [], "query_id long, rank long, doc_id long, score double"
-    )
-    q_terms = {qid: sorted(set(tokenize_py(q))) for qid, q in queries.items()}
-    all_terms = sorted({t for ts in q_terms.values() for t in ts})
-    if not all_terms or r.n_docs == 0:
-        return empty
-    term_df = r.term_dfs(all_terms)
-    if not term_df:
-        return empty
-    idf_all = r.idf(term_df)
-    query_idf = {
-        qid: {t: idf_all[t] for t in ts if t in idf_all}
-        for qid, ts in q_terms.items()
-    }
-    query_idf = {qid: m for qid, m in query_idf.items() if m}
+    term_df, query_idf = _query_idf(r, queries)
     if not query_idf:
-        return empty
+        return spark.createDataFrame(
+            [], "query_id long, rank long, doc_id long, score double"
+        )
 
     blocks = r.candidate_blocks(sorted(term_df))
     local = blocks.groupBy("shard").applyInPandas(
-        _batch_shard_scorer(query_idf, r.k1, r.b, r.avgdl, k),
-        "query_id long, doc_id long, score double",
+        _shard_scorer(query_idf, r.k1, r.b, r.avgdl, k), _SCORES
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (

@@ -8,12 +8,14 @@ kill/rerun builds equal a clean build; WAND == exhaustive on every query
 import glob
 import os
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from iscc_search_spark.catalog import IndexCatalog
 from iscc_search_spark.config import EngineConfig
 from iscc_search_spark.corpus import doc_id_for_url, generate_queries
+from iscc_search_spark.functions.textnorm import tokenize_py
 from iscc_search_spark.operators.build import build_index, build_segments, build_postings
 from iscc_search_spark.operators.query import bm25_exact_topk
 from iscc_search_spark.operators.wand import bm25_wand_topk
@@ -67,17 +69,107 @@ def test_local_fastpath_rank_identical(spark, index_dir, oracle):
     assert nonempty > 0
 
 
-def test_wand_batch_equals_oracle(spark, index_dir, oracle):
-    from iscc_search_spark.operators.wand import bm25_wand_topk_batch
+def _single(spark, index, q: str, k: int = 10) -> list:
+    rows = bm25_wand_topk(spark, index, q, k=k).orderBy("rank").collect()
+    return [(r["doc_id"], r["score"]) for r in rows]
 
-    queries = dict(enumerate(generate_queries(30)))
-    out = bm25_wand_topk_batch(spark, index_dir, queries, k=10).collect()
+
+def _local(reader, q: str, k: int = 10) -> list:
+    from iscc_search_spark.operators.wand import bm25_wand_topk_local
+
+    pdf = bm25_wand_topk_local(reader, q, k=k)
+    return list(zip(pdf["doc_id"].tolist(), pdf["score"].tolist()))
+
+
+def _batch_query_set(oracle) -> dict[int, str]:
+    """The generated queries plus the shapes the shared kernel branches on:
+    a duplicate and a reordered query (signature fan-out), an all-OOV and a
+    single-term query, one with fewer than k matches, and queries whose
+    every term has df >= k (finite theta: the block-max prune runs)."""
+    base = generate_queries(30)
+    by_df = sorted(oracle.postings, key=lambda t: (-len(oracle.postings[t]), t))
+    rare = next(t for t in reversed(by_df) if 1 < len(oracle.postings[t]) < 10)
+    oov = "qqqzx zzkwv"
+    assert not any(t in oracle.postings for t in tokenize_py(oov))
+    mid = [t for t in by_df if 30 <= len(oracle.postings[t]) <= 120]
+    extra = [
+        base[1],
+        " ".join(reversed(base[1].split())),
+        oov,
+        by_df[40],
+        rare,
+        " ".join(by_df[:3]),
+        f"{mid[0]} {by_df[0]} {by_df[1]}",
+        f"{mid[len(mid) // 2]} {by_df[2]}",
+        " ".join(mid[-3:]),
+    ]
+    for q in extra[-4:]:
+        assert all(len(oracle.postings[t]) >= 10 for t in tokenize_py(q)), q
+    return dict(enumerate(base + extra))
+
+
+def test_wand_batch_equals_oracle(spark, index_dir, oracle):
+    """Batch, single-query and driver-local answers (one shared kernel)
+    equal each other and the oracle on every query of the set."""
+    from iscc_search_spark.operators.wand import IndexReader, bm25_wand_topk_batch
+
+    queries = _batch_query_set(oracle)
+    reader = IndexReader(spark, index_dir)
+    out = bm25_wand_topk_batch(spark, reader, queries, k=10).collect()
     got: dict[int, list] = {}
     for r in sorted(out, key=lambda r: (r["query_id"], r["rank"])):
         got.setdefault(r["query_id"], []).append((r["doc_id"], r["score"]))
     for qid, q in queries.items():
         want = oracle.search(q, k=10)
         assert got.get(qid, []) == want, f"qid={qid} query={q!r}"
+        assert _single(spark, reader, q) == want, f"single qid={qid} query={q!r}"
+        assert _local(reader, q) == want, f"local qid={qid} query={q!r}"
+    assert bm25_wand_topk_batch(spark, reader, queries, k=0).count() == 0
+
+
+def test_stats_over_cache_cap_uses_spark_lookup(spark, index_dir, oracle, monkeypatch):
+    """Above _STATS_CACHE_MAX_ROWS the reader keeps no term-stats cache and
+    looks df up through Spark; every entry point still equals the oracle."""
+    from iscc_search_spark.operators import wand
+
+    monkeypatch.setattr(wand, "_STATS_CACHE_MAX_ROWS", 0)
+    reader = wand.IndexReader(spark, index_dir)
+    assert reader._stats is None
+    queries = dict(enumerate(generate_queries(8)))
+    out = wand.bm25_wand_topk_batch(spark, reader, queries, k=10).collect()
+    for qid, q in queries.items():
+        want = oracle.search(q, k=10)
+        batch = sorted(
+            (r["rank"], r["doc_id"], r["score"]) for r in out if r["query_id"] == qid
+        )
+        assert [(d, s) for _, d, s in batch] == want, q
+        assert _single(spark, reader, q) == want, q
+        assert _local(reader, q) == want, q
+
+
+def test_local_over_postings_cap_falls_back(spark, index_dir, oracle, monkeypatch):
+    """Above _LOCAL_POSTINGS_CAP the driver-local path answers through the
+    distributed scorer: same frame, same oracle answer."""
+    from iscc_search_spark.operators import wand
+
+    reader = wand.IndexReader(spark, index_dir)
+    queries = [q for q in generate_queries(8) if oracle.search(q, k=10)]
+    assert queries
+    want = {q: wand.bm25_wand_topk_local(reader, q, k=10) for q in queries}
+    calls = []
+
+    def spy(*args, **kw):
+        calls.append(args[2])
+        return bm25_wand_topk(*args, **kw)
+
+    monkeypatch.setattr(wand, "_LOCAL_POSTINGS_CAP", 0)
+    monkeypatch.setattr(wand, "bm25_wand_topk", spy)
+    for q in queries:
+        got = wand.bm25_wand_topk_local(reader, q, k=10)
+        pd.testing.assert_frame_equal(got, want[q])
+        pairs = list(zip(got["doc_id"].tolist(), got["score"].tolist()))
+        assert pairs == oracle.search(q, k=10), q
+    assert calls == queries
 
 
 def test_wand_equals_exhaustive(spark, index_dir, pages_df):
