@@ -28,11 +28,6 @@ def zigzag(v: np.ndarray) -> np.ndarray:
     return ((v << 1) ^ (v >> 63)).view(np.uint64)
 
 
-def unzigzag(u: np.ndarray) -> np.ndarray:
-    u = u.astype(np.uint64, copy=False)
-    return ((u >> _U64(1)) ^ (_U64(0) - (u & _U64(1)))).view(np.int64)
-
-
 def varbyte_lengths(values: np.ndarray) -> np.ndarray:
     """Encoded byte length per value (vectorized)."""
     v = values.astype(np.uint64, copy=True)
@@ -146,28 +141,6 @@ def decode_doc_ids(buf: bytes) -> np.ndarray:
         return np.empty(0, dtype=np.int64)
     u = np.cumsum(codes, dtype=np.uint64)
     return (u ^ _SIGN_BIT).view(np.int64)
-
-
-def doc_id_delta_codes(doc_ids: np.ndarray, block_starts: np.ndarray) -> np.ndarray:
-    """uint64 delta codes for a CONCATENATION of ascending blocks: each
-    block restarts with its raw (sign-flipped) first value; within-block
-    positions carry deltas.  Feed to varbyte_encode_batch and slice per
-    block — the vectorized whole-group encode path."""
-    d = np.asarray(doc_ids, dtype=np.int64)
-    u = d.view(np.uint64) ^ _SIGN_BIT
-    codes = np.empty(len(u), dtype=np.uint64)
-    if len(u):
-        codes[1:] = u[1:] - u[:-1]
-        codes[block_starts] = u[block_starts]
-    return codes
-
-
-def encode_tfs(tfs: np.ndarray) -> bytes:
-    return varbyte_encode(np.asarray(tfs, dtype=np.int64).view(np.uint64))
-
-
-def decode_tfs(buf: bytes) -> np.ndarray:
-    return varbyte_decode(buf).view(np.int64)
 
 
 # --- frame-of-reference bitpacking ------------------------------------------

@@ -37,11 +37,6 @@ def doc_id_udf(url: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-def doc_id_py(url: str) -> int:
-    d = hashlib.blake2b(url.encode("utf-8"), digest_size=8).digest()
-    return int.from_bytes(d, "big", signed=True)
-
-
 def instance_expr(text_col: Column | str) -> Column:
     """INSTANCE_V0 stand-in: exact 64-bit content hash — first 16 hex chars
     of md5(text) as signed int64, assembled from two 32-bit halves (a single
@@ -71,17 +66,6 @@ def h32_py(term: str) -> int:
     return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:8], 16)
 
 
-def h32_sql_duckdb(term_expr: str) -> str:
-    """DuckDB rendering of h32 (no conv(); parse 8 hex nibbles manually)."""
-    nib = (
-        "(strpos('0123456789abcdef', substr(md5({t}), {i}, 1)) - 1)"
-    )
-    parts = [
-        f"{nib.format(t=term_expr, i=i + 1)} * {16 ** (7 - i)}" for i in range(8)
-    ]
-    return "(" + " + ".join(parts) + ")::BIGINT"
-
-
 # --- minhash permutations ----------------------------------------------------
 
 
@@ -95,11 +79,3 @@ def minhash_params(n_perm: int, seed: int = 42) -> tuple[list[int], list[int]]:
     a = rng.integers(1, MERSENNE_31, size=n_perm).tolist()
     b = rng.integers(0, MERSENNE_31, size=n_perm).tolist()
     return [int(x) for x in a], [int(x) for x in b]
-
-
-def minhash_expr(h32: Column, a: int, b: int) -> Column:
-    return (h32 % MERSENNE_31 * F.lit(a) + F.lit(b)) % MERSENNE_31
-
-
-def minhash_sql(h32_sql: str, a: int, b: int) -> str:
-    return f"(({h32_sql} % {MERSENNE_31}) * {a} + {b}) % {MERSENNE_31}"

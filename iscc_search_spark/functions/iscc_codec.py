@@ -73,11 +73,6 @@ def simhash_code_udf(simhash: pd.Series) -> pd.Series:
     return simhash.map(lambda v: simhash_to_code(int(v)))
 
 
-@F.pandas_udf(T.LongType())
-def code_simhash_udf(code: pd.Series) -> pd.Series:
-    return code.map(code_to_simhash)
-
-
 # --- ISCC-ID v1: realm-scoped 64-bit identifiers (P4 realm predicate) --------
 # The reference scopes every asset id to a REALM (0 = sandbox, 1 =
 # production) carried in the ISCC-ID header's subtype nibble; queries

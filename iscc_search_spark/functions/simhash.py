@@ -370,9 +370,14 @@ def hamming_expr(a, b):
     return F.bit_count(ca.bitwiseXOR(cb))
 
 
-def neardup_score_expr(a, b):
-    """1 - hamming/64, mirroring the reference's 1 - d/ndim similarity."""
-    return F.lit(1.0) - hamming_expr(a, b).cast("double") / F.lit(64.0)
+_POP8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.int64)
+
+
+def hamming_np(a: np.ndarray, b) -> np.ndarray:
+    """int64 hamming distance between int64 arrays (or an array and a
+    signed int64 scalar) — the driver-side mirror of hamming_expr."""
+    x = np.ascontiguousarray(np.bitwise_xor(a, b), dtype=np.int64)
+    return _POP8[x.view(np.uint8)].reshape(len(x), 8).sum(axis=1)
 
 
 def hamming128_expr(a_hi, a_lo, b_hi, b_lo):

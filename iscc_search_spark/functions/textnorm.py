@@ -84,11 +84,6 @@ def tokens_expr(text: Column | str) -> Column:
     )
 
 
-def doc_len_expr(text: Column | str) -> Column:
-    """Token count of a document (BM25 length normalization), JVM-side."""
-    return F.size(tokens_expr(text)).cast("long")
-
-
 def tokenize_py(text: str) -> list[str]:
     """Single-node reference tokenizer — must agree with tokens_expr."""
     norm = unicodedata.normalize("NFC", text).lower()

@@ -778,12 +778,6 @@ def _bucket_of(term: str, n_buckets: int) -> int:
     return h % n_buckets
 
 
-def bucket_expr(term_col, n_buckets: int):
-    """JVM-side bucket — first 4 bytes of md5, matching _bucket_of."""
-    c = F.col(term_col) if isinstance(term_col, str) else term_col
-    return (F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long") % n_buckets).cast("int")
-
-
 def corpus_stats_from_checkpoints(
     spark: SparkSession, cat: IndexCatalog
 ) -> tuple[int, float]:
@@ -898,8 +892,12 @@ def build_postings(
     n_shards: int | None = None,
     run_id: str = "run",
     shards: list[int] | None = None,
+    publish: bool = True,
 ) -> BuildResult:
     """Stage B: docs -> sharded compressed postings + term_stats + meta.
+
+    ``publish=False`` leaves meta.json (the version readers watch) to the
+    caller, which writes it once every table of the write is final.
 
     ``shards=None`` (or every shard) is the full build: the output dirs
     are cleared first — dynamic partition overwrite alone would leave
@@ -975,7 +973,8 @@ def build_postings(
         blocks.unpersist()
 
     secs = time.time() - t0
-    _write_index_meta(cat, cfg, n_docs, avgdl, n_shards, run_id)
+    if publish:
+        _write_index_meta(cat, cfg, n_docs, avgdl, n_shards, run_id)
     stage = "postings" if shards is None else "postings_incr"
     _append_metrics(
         cat,
@@ -1097,17 +1096,23 @@ def _refresh_shards_and_parts(
 ) -> None:
     """After ``_merge_parts``: the derived-table refresh of ``parts`` runs
     alongside stage B restricted to ``shards`` — both only read the
-    committed docs table, and every write sets its own overwrite mode."""
+    committed docs table, and every write sets its own overwrite mode.
+    meta.json is written last, after both: a reader that sees the new
+    version (its mtime) never caches a derived table mid-rewrite."""
     derived = None
     if cat.exists("units") or cat.exists("simprints"):
         derived = lambda: build_derived(spark, cat, parts=parts)  # noqa: E731
     if rebuild_postings and shards:
-        _alongside(
-            lambda: build_postings(spark, cat, cfg, n_shards, run_id, shards=shards),
+        res = _alongside(
+            lambda: build_postings(
+                spark, cat, cfg, n_shards, run_id, shards=shards, publish=False
+            ),
             derived,
         )
+        _write_index_meta(cat, cfg, res.n_docs, res.avgdl, n_shards, run_id)
     elif derived is not None:
         derived()
+        cat.write_meta(cat.read_meta())  # a new version for readers' caches
 
 
 def _alongside(main, side=None):
@@ -1289,6 +1294,8 @@ def build_index(
             spark, cat, parts=built if refresh else None, combo2=combo2
         )
     res = _alongside(
-        lambda: build_postings(spark, cat, cfg, n_shards, run_id), derived_job
+        lambda: build_postings(spark, cat, cfg, n_shards, run_id, publish=False),
+        derived_job,
     )
+    _write_index_meta(cat, cfg, res.n_docs, res.avgdl, n_shards, run_id)
     return BuildResult(res.n_docs, res.avgdl, built, skipped, time.time() - t0)

@@ -31,22 +31,35 @@ surviving rows are scored.  At 10^12 docs this becomes a banded equi-join
 against a units table bucketed by band key (same shape as
 operators/neardup.py); threshold 0.75 <=> hamming <= 16 exactly, so the
 prune is lossless either way.
+
+Serving path: ``SearchIndex.search_similar`` and the HTTP ``/similar``
+route answer with ``search_assets_multiunit_local`` — the same 35-key
+lookup and scoring in numpy over the IndexReader's cached ``units`` and
+``unit_bands`` tables, zero Spark jobs per query (the first call loads
+each table with one pyarrow read).  Size gate: when the tables are
+missing or would push the reader's cache past ``wand._SIM_CACHE_BYTES``,
+the facade runs ``search_assets_multiunit`` (the keyed broadcast join),
+which also backs the registry gate and is the tests' reference.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from iscc_search_spark.functions.hashing import instance_expr as _instance_expr
-from iscc_search_spark.functions.simhash import hamming_expr, simhash_udf
+from iscc_search_spark.functions.simhash import hamming_expr, hamming_np, simhash_udf
 from iscc_search_spark.functions.textnorm import data_simhash_udf, tokens_expr
 from iscc_search_spark.operators.query import doc_term_tf
-from iscc_search_spark.operators.simprints import band_widths
+from iscc_search_spark.operators.simprints import band_rows, band_widths, ranked
+from iscc_search_spark.session import arrow_frame
 
 MATCH_THRESHOLD = 0.75  # per-unit confidence floor (reference default)
 CONF_EXPONENT = 4       # score^4 weighting (reference default)
 _MAX_HAMMING = 16       # 1 - 16/64 == 0.75 exactly (dyadic)
+SIMILAR_DDL = "rank long, doc_id long, score double, n_units long"
 
 
 def asset_units(
@@ -398,11 +411,8 @@ def search_assets_multiunit(
         units = asset_units(docs, text_col, id_col)
     spark = units.sparkSession
     qrow = units.filter(F.col("doc_id") == query_doc_id).collect()
-    empty = spark.createDataFrame(
-        [], "rank long, doc_id long, score double, n_units long"
-    )
     if not qrow:
-        return empty
+        return arrow_frame(spark, [], SIMILAR_DDL)
     qc, qd, qi = (
         int(qrow[0]["content_sh"]),
         int(qrow[0]["data_sh"]),
@@ -417,7 +427,7 @@ def search_assets_multiunit(
         # once JIT-compiled; the join's compact generated code doesn't
         # hit that cliff, and it is the keyed-lookup plan shape anyway.)
         keys = unit_band_keys(qc, qd, qi, _MAX_HAMMING + 1)
-        kdf = spark.createDataFrame(keys, "band int, key long")
+        kdf = arrow_frame(spark, keys, "band int, key long")
         cand_ids = (
             bands.join(F.broadcast(kdf), ["band", "key"])
             .select("doc_id")
@@ -483,4 +493,60 @@ def search_assets_multiunit(
     w = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     return topk.withColumn("rank", F.row_number().over(w).cast("long")).select(
         "rank", "doc_id", "score", "n_units"
+    )
+
+
+def unit_row(units: dict[str, np.ndarray], doc_id: int) -> int | None:
+    """Row of ``doc_id`` in a cached, doc_id-sorted units table (None when
+    the doc is not indexed)."""
+    ids = units["doc_id"]
+    i = int(np.searchsorted(ids, doc_id))
+    return i if i < len(ids) and ids[i] == doc_id else None
+
+
+def search_assets_multiunit_local(
+    reader, query_doc_id: int, k: int = 10
+) -> pd.DataFrame | None:
+    """search_assets_multiunit's answer as a pandas frame, zero Spark
+    jobs: the 35-key lookup runs as ``band_rows`` over the reader's cached
+    ``unit_bands`` table, the query and candidate units come from its
+    cached ``units`` table (IndexReader.sim_tables), and the scoring is
+    numpy with the Spark expressions' exact IEEE operations.  None when
+    the tables are not cached (missing, or over the reader's cache cap):
+    the caller then runs search_assets_multiunit."""
+    reader.ensure_fresh()
+    tables = reader.sim_tables("units", "unit_bands")
+    if tables is None:
+        return None
+    units, bands = tables
+    ids = units["doc_id"]
+    i = unit_row(units, query_doc_id)
+    if i is None:
+        none = np.empty(0, np.int64)
+        return ranked(none, none.astype(np.float64), k, n_units=none)
+    qc, qd, qi = (int(units[c][i]) for c in ("content_sh", "data_sh", "instance"))
+    band, key = np.array(unit_band_keys(qc, qd, qi, _MAX_HAMMING + 1), np.int64).T
+    rows, _ = band_rows(bands, band, key)
+    cand = np.unique(bands["doc_id"][rows])
+    cand = cand[cand != query_doc_id]
+    at = np.searchsorted(ids, cand).clip(max=len(ids) - 1)
+    at = at[ids[at] == cand]  # the Spark path's semi join on units
+
+    def sim(col: str, qv: int) -> np.ndarray:
+        return 1.0 - hamming_np(units[col][at], qv).astype(np.float64) / 64.0
+
+    s_c, s_d = sim("content_sh", qc), sim("data_sh", qd)
+    s_i = np.where(units["instance"][at] == qi, 1.0, 0.0)
+    c_c, c_d, c_i = (s >= MATCH_THRESHOLD for s in (s_c, s_d, s_i))
+    # frozen aggregation order: content, data, instance (ordered float sums)
+    wsum = (
+        np.where(c_c, s_c * s_c * s_c * s_c, 0.0)
+        + np.where(c_d, s_d * s_d * s_d * s_d, 0.0)
+        + np.where(c_i, s_i * s_i * s_i * s_i, 0.0)
+    )
+    ssum = np.where(c_c, s_c, 0.0) + np.where(c_d, s_d, 0.0) + np.where(c_i, s_i, 0.0)
+    n_units = c_c.astype(np.int64) + c_d + c_i
+    keep = ssum > 0.0
+    return ranked(
+        ids[at][keep], wsum[keep] / ssum[keep], k, n_units=n_units[keep]
     )

@@ -36,18 +36,30 @@ a 64-bit hash — the round-3 measured scale gap).  The wider hash also
 CONCENTRATES the relative hamming of truly-similar pairs (std of the
 relative distance ~ 1/sqrt(bits)), so absolute thresholds separate
 near-identical segments from vocabulary-clustered noise far better.
+
+Serving path: ``SearchIndex.search_granular`` and the HTTP ``/granular``
+route answer with ``granular_topk_local`` — the 13-band keyed lookup,
+hamming verify and coverage scoring in numpy over the IndexReader's
+cached ``simprint_bands`` table (it carries the hash limbs), zero Spark
+jobs per query (the first call loads the table with one pyarrow read).
+Size gate: when the table is missing or would push the reader's cache
+past ``wand._SIM_CACHE_BYTES``, the facade runs ``granular_topk`` over
+the persisted band tables (combo2 for max_hamming >= 10 when built); the
+Spark operator also backs the registry gates and is the tests' reference.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from iscc_search_spark.functions.simhash import (
     bigram_hash128_py,
     hamming128_expr,
+    hamming_np,
     neardup_score128_expr,
     term_hash128,
 )
@@ -55,10 +67,12 @@ from iscc_search_spark.functions.textnorm import (
     SEG_TOKENS,
     token_spans_py,
 )
+from iscc_search_spark.session import arrow_frame
 
 _token_spans = token_spans_py  # query-side tokenizer (shared with stage A)
 
 SIMPRINT_BITS = 128
+GRANULAR_DDL = "rank long, doc_id long, score double, n_matched_segs long"
 _U64 = (1 << 64) - 1
 
 
@@ -245,6 +259,22 @@ def _combo_key_expr(hi, lo, widths, idxs):
     return key
 
 
+def _query_keys(qsegs, n_bands: int, combo: int) -> list[tuple]:
+    """(band, key, q_seg, q_hi, q_lo) lookup keys of the query segments:
+    one per (segment, ``combo``-band subset), band = the subset's index in
+    the enumeration the build writer shares (combo=1: band i itself)."""
+    widths = band_widths(n_bands, SIMPRINT_BITS)
+    combos = _band_combos(n_bands, combo)
+    return [
+        (cid, _combo_key_py(hi, lo, widths, idxs), s, hi, lo)
+        for s, _, _, _, hi, lo in qsegs
+        for cid, idxs in enumerate(combos)
+    ]
+
+
+_QUERY_KEYS_DDL = "band int, key long, q_seg int, q_hi long, q_lo long"
+
+
 def _banded_candidates(
     simprints: DataFrame, qsegs, n_bands: int, combo: int
 ) -> DataFrame:
@@ -261,22 +291,14 @@ def _banded_candidates(
     never a per-combo re-scan."""
     spark = simprints.sparkSession
     widths = band_widths(n_bands, SIMPRINT_BITS)
-    combos = _band_combos(n_bands, combo)
-
-    q_rows = []
-    for s, _, _, _, hi, lo in qsegs:
-        for cid, idxs in enumerate(combos):
-            q_rows.append((cid, _combo_key_py(hi, lo, widths, idxs), s, hi, lo))
-    q = spark.createDataFrame(
-        q_rows, "band int, key long, q_seg int, q_hi long, q_lo long"
-    )
+    q = arrow_frame(spark, _query_keys(qsegs, n_bands, combo), _QUERY_KEYS_DDL)
 
     entries = [
         F.struct(
             F.lit(cid).alias("band"),
             _combo_key_expr("simhash", "sh_lo", widths, idxs).alias("key"),
         )
-        for cid, idxs in enumerate(combos)
+        for cid, idxs in enumerate(_band_combos(n_bands, combo))
     ]
     bands = simprints.select(
         "doc_id", "seg_idx", "simhash", "sh_lo",
@@ -374,25 +396,14 @@ def granular_topk(
             f"(got n_bands={n_bands}, combo={combo}) for exact recall"
         )
     qsegs = segment_simhashes_py(query_text, seg_tokens)
-    empty = spark.createDataFrame(
-        [], "rank long, doc_id long, score double, n_matched_segs long"
-    )
     if not qsegs:
-        return empty
+        return arrow_frame(spark, [], GRANULAR_DDL)
     n_q = len(qsegs)
 
     if bands2 is not None:
         # combo2 keyed lookup: enumeration order shared with the build
         # writer (build.py:build_derived seg2_entries)
-        widths = band_widths(bands2_n, SIMPRINT_BITS)
-        combos = _band_combos(bands2_n, 2)
-        q_rows = []
-        for s, _, _, _, hi, lo in qsegs:
-            for cid, idxs in enumerate(combos):
-                q_rows.append((cid, _combo_key_py(hi, lo, widths, idxs), s, hi, lo))
-        q = spark.createDataFrame(
-            q_rows, "band int, key long, q_seg int, q_hi long, q_lo long"
-        )
+        q = arrow_frame(spark, _query_keys(qsegs, bands2_n, 2), _QUERY_KEYS_DDL)
         cands = bands2.join(F.broadcast(q), ["band", "key"])
         if "simhash" not in bands2.columns:
             # format_version-5 slim table: the hash limbs live only in
@@ -414,14 +425,7 @@ def granular_topk(
                 )
             )
     elif bands is not None:
-        widths = band_widths(bands_n, SIMPRINT_BITS)
-        q_rows = []
-        for s, _, _, _, hi, lo in qsegs:
-            for b, (shift, w) in enumerate(widths):
-                q_rows.append((b, band_key128_py(hi, lo, shift, w), s, hi, lo))
-        q = spark.createDataFrame(
-            q_rows, "band int, key long, q_seg int, q_hi long, q_lo long"
-        )
+        q = arrow_frame(spark, _query_keys(qsegs, bands_n, 1), _QUERY_KEYS_DDL)
         cands = bands.join(F.broadcast(q), ["band", "key"])
     else:
         cands = _banded_candidates(simprints, qsegs, n_bands, combo)
@@ -454,3 +458,90 @@ def granular_topk(
     return topk.withColumn("rank", F.row_number().over(w).cast("long")).select(
         "rank", "doc_id", "score", "n_matched_segs"
     )
+
+
+def band_rows(
+    table: dict[str, np.ndarray], bands: np.ndarray, keys: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Keyed lookup in a (band, key)-sorted cached table: the row indices
+    matching each query (band, key), and per row the query key's index —
+    the driver-side mirror of the broadcast join on (band, key)."""
+    tb, tk = table["band"], table["key"]
+    lo = np.zeros(len(bands), np.int64)
+    hi = np.zeros(len(bands), np.int64)
+    for b in np.unique(bands):
+        s, e = np.searchsorted(tb, [b, b + 1])
+        m = bands == b
+        lo[m] = s + np.searchsorted(tk[s:e], keys[m], "left")
+        hi[m] = s + np.searchsorted(tk[s:e], keys[m], "right")
+    n = hi - lo
+    starts = np.cumsum(n) - n
+    rows = np.repeat(lo - starts, n) + np.arange(int(n.sum()))
+    return rows, np.repeat(np.arange(len(bands)), n)
+
+
+def ranked(doc_ids: np.ndarray, score: np.ndarray, k: int, **extra) -> pd.DataFrame:
+    """(rank, doc_id, score, *extra) top k by (-score, doc_id) — the
+    Spark operators' orderBy + limit + row_number, in numpy."""
+    order = np.lexsort((doc_ids, -score))[: max(k, 0)]
+    out = pd.DataFrame(
+        {
+            "rank": np.arange(1, len(order) + 1, dtype=np.int64),
+            "doc_id": doc_ids[order].astype(np.int64),
+            "score": score[order].astype(np.float64),
+        }
+    )
+    for name, v in extra.items():
+        out[name] = v[order].astype(np.int64)
+    return out
+
+
+def granular_topk_local(
+    reader, query_text: str, k: int = 10, max_hamming: int = 8,
+    seg_tokens: int = SEG_TOKENS,
+) -> pd.DataFrame | None:
+    """granular_topk's answer as a pandas frame, zero Spark jobs: the
+    13-band keyed lookup runs as ``band_rows`` over the reader's cached
+    ``simprint_bands`` table (IndexReader.sim_tables), the verify and
+    scoring as numpy over the candidate rows with the Spark path's exact
+    IEEE operations.  None when the table is not cached (missing, or over
+    the reader's cache cap): the caller then runs granular_topk."""
+    from iscc_search_spark.operators.build import SEG_BANDS
+
+    if max_hamming >= SEG_BANDS:
+        raise ValueError(
+            f"max_hamming={max_hamming} exceeds the persisted band "
+            f"table's exact-recall bound (bands_n={SEG_BANDS})"
+        )
+    reader.ensure_fresh()
+    tables = reader.sim_tables("simprint_bands")
+    if tables is None:
+        return None
+    (sb,) = tables
+    qsegs = segment_simhashes_py(query_text, seg_tokens)
+    keys = _query_keys(qsegs, SEG_BANDS, 1)
+    cols = [np.array(c, dtype=np.int64) for c in zip(*keys)] or [
+        np.empty(0, np.int64)
+    ] * 5
+    q_band, q_key, q_seg, q_hi, q_lo = cols
+    rows, which = band_rows(sb, q_band, q_key)
+    h = hamming_np(sb["simhash"][rows], q_hi[which]) + hamming_np(
+        sb["sh_lo"][rows], q_lo[which]
+    )
+    keep = h <= max_hamming
+    doc, seg = sb["doc_id"][rows][keep], q_seg[which][keep]
+    sim = 1.0 - h[keep].astype(np.float64) / 128.0
+    if not len(doc):
+        return ranked(doc, sim, k, n_matched_segs=doc)
+    # best similarity per (doc, query segment), then per doc the sum of
+    # the bests over the query's segment count (dyadic: exact sums)
+    order = np.lexsort((seg, doc))
+    doc, seg, sim = doc[order], seg[order], sim[order]
+    pair = np.flatnonzero(
+        np.r_[True, (doc[1:] != doc[:-1]) | (seg[1:] != seg[:-1])]
+    )
+    best, bdoc = np.maximum.reduceat(sim, pair), doc[pair]
+    first = np.flatnonzero(np.r_[True, bdoc[1:] != bdoc[:-1]])
+    score = np.add.reduceat(best, first) / float(len(qsegs))
+    n_matched = np.diff(np.r_[first, len(bdoc)])
+    return ranked(bdoc[first], score, k, n_matched_segs=n_matched)

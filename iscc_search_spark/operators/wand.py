@@ -57,6 +57,16 @@ from iscc_search_spark.operators.build import _bucket_of
 # reader falls back to bucket-pruned distributed lookups per query batch
 _STATS_CACHE_MAX_ROWS = 20_000_000
 
+# driver-side cap on the bytes a reader's derived-table caches hold (units
+# and the band tables behind search_similar / search_granular, at most 8 B
+# a cell; separate from the 256 MB posting-bucket cache); a table that
+# would push the cache past it is not cached and those queries run as
+# Spark jobs.
+# Peak memory of one fill is about 3x the table's cached bytes (the Arrow
+# table, its numpy columns and the sorted copies coexist until it returns);
+# fills run one at a time per reader, so that peak is paid once at a time.
+_SIM_CACHE_BYTES = 256 * 1024 * 1024
+
 
 def decode_block_ids(min_doc: int, n: int, doc_buf: bytes) -> np.ndarray:
     """Block doc_ids: column-stored first value + FOR-packed in-block deltas
@@ -84,7 +94,8 @@ def decode_block_positions(pos_buf: bytes, tfs: np.ndarray) -> np.ndarray:
 
 class IndexReader:
     """Open-index handle: meta + driver-cached term stats + a reused blocks
-    relation (one parquet listing per open, not per query).
+    relation (one parquet listing per open, not per query), plus lazily
+    filled caches of posting buckets and of the derived similarity tables.
 
     upsert_docs/delete_docs rewrite postings/term_stats/meta in place; a
     long-lived reader detects this via the meta.json mtime (one os.stat per
@@ -100,6 +111,7 @@ class IndexReader:
         self.spark = spark
         self.cat = IndexCatalog(index_dir)
         self._reload_lock = threading.Lock()
+        self._sim_lock = threading.Lock()  # one derived-table fill at a time
         self._open()
 
     def _open(self) -> None:
@@ -124,6 +136,7 @@ class IndexReader:
         # after _pa_dataset: a bucket_blocks call that sees this new cache
         # also sees the reset dataset, so it never caches old-version files
         self._bucket_cache: dict[int, pd.DataFrame] = {}
+        self._sim_cache: dict[str, dict[str, np.ndarray] | None] = {}
         self._meta_mtime = mtime  # published last: the reload is complete
 
     def pa_dataset(self):
@@ -161,6 +174,60 @@ class IndexReader:
         self._bucket_cache_bytes += int(t.nbytes)
         cache[bucket] = pdf
         return pdf
+
+    # derived tables for the similarity queries, as numpy columns sorted
+    # for searchsorted lookups: units by doc_id, the band tables by (band,
+    # key).  Each is filled by one pyarrow read on its first similarity
+    # call, never in _open (a reader open must stay cheap).
+    _SIM_TABLES = {
+        "units": (("doc_id", "content_sh", "data_sh", "instance"), ("doc_id",)),
+        "unit_bands": (("band", "key", "doc_id"), ("band", "key")),
+        "simprint_bands": (
+            ("band", "key", "doc_id", "seg_idx", "simhash", "sh_lo"),
+            ("band", "key"),
+        ),
+    }
+
+    def sim_tables(self, *names: str) -> list[dict[str, np.ndarray]] | None:
+        """The named derived tables, all from one index version; None when
+        one is missing, holds nulls, or would push the cache past
+        _SIM_CACHE_BYTES (the caller then answers through Spark)."""
+        cache = self._sim_cache  # this version's cache, even mid-reload
+        out = []
+        for name in names:
+            if name not in cache:
+                with self._sim_lock:  # check-and-fill: one load per table
+                    if name not in cache:
+                        cache[name] = self._load_sim_table(name, cache)
+            if cache[name] is None:
+                return None
+            out.append(cache[name])
+        return out
+
+    def _load_sim_table(self, name: str, cache: dict) -> dict | None:
+        """One table's sorted numpy columns (called under _sim_lock, so the
+        budget check sees every table this cache holds)."""
+        import os
+
+        import pyarrow.dataset as ds
+
+        cols, keys = self._SIM_TABLES[name]
+        path = self.cat.path(name)
+        if not os.path.isdir(path):
+            return None
+        d = ds.dataset(path, format="parquet", partitioning="hive")
+        n = d.count_rows()
+        used = sum(a.nbytes for t in cache.values() if t for a in t.values())
+        if used + 8 * len(cols) * n > _SIM_CACHE_BYTES:
+            return None
+        if n == 0:
+            return {c: np.empty(0, np.int64) for c in cols}
+        t = d.to_table(columns=list(cols))
+        if any(t.column(c).null_count for c in cols):
+            return None
+        arrays = {c: t.column(c).to_numpy() for c in cols}
+        order = np.lexsort([arrays[c] for c in reversed(keys)])
+        return {c: a[order] for c, a in arrays.items()}
 
     def ensure_fresh(self) -> None:
         """Reload caches if the index was updated since open (cheap stat;

@@ -17,6 +17,7 @@ from iscc_search_spark.operators.wand import (
     bm25_wand_topk,
     bm25_wand_topk_batch,
 )
+from iscc_search_spark.session import arrow_frame
 
 
 class SearchIndex:
@@ -108,12 +109,21 @@ class SearchIndex:
         return load_simprints(self.spark, self.cat.root)
 
     def search_similar(self, doc_id: int, k: int = 10) -> DataFrame:
-        """Multi-unit ISCC search (confidence-weighted Σs⁴/Σs): candidates
-        by keyed lookup from the persisted LSH band table, values from the
-        persisted units table."""
+        """Multi-unit ISCC search (confidence-weighted Σs⁴/Σs).  Answered
+        driver-side from the reader's cached units and unit_bands tables
+        (search_assets_multiunit_local; the ≤ k rows reach Spark through
+        Arrow); above the cache cap, or without the derived tables, by
+        the Spark operator's keyed lookup on the persisted band table."""
         from iscc_search_spark.operators.build import load_unit_bands
-        from iscc_search_spark.operators.multiunit import search_assets_multiunit
+        from iscc_search_spark.operators.multiunit import (
+            SIMILAR_DDL,
+            search_assets_multiunit,
+            search_assets_multiunit_local,
+        )
 
+        pdf = search_assets_multiunit_local(self.reader, doc_id, k)
+        if pdf is not None:
+            return arrow_frame(self.spark, pdf, SIMILAR_DDL)
         return search_assets_multiunit(
             None, doc_id, k=k, units=self.units(),
             bands=load_unit_bands(self.spark, self.cat.root),
@@ -122,10 +132,12 @@ class SearchIndex:
     def search_granular(
         self, query_text: str, k: int = 10, max_hamming: int = 8
     ) -> DataFrame:
-        """Chunk-level simprint search: candidates by keyed lookup from the
-        persisted simprint band tables (exact recall for max_hamming <= 12).
-        High thresholds (>= 10) route to the combo2 table, whose two-band
-        keys admit ~40x fewer random collisions than the single-band keys;
+        """Chunk-level simprint search (exact recall for max_hamming <=
+        12).  Answered driver-side from the reader's cached simprint_bands
+        table (granular_topk_local); above the cache cap, or without the
+        derived tables, by the Spark operator's keyed lookup.  There, high
+        thresholds (>= 10) route to the combo2 table, whose two-band keys
+        admit ~40x fewer random collisions than the single-band keys;
         low thresholds use the single-band table (fewer lookup keys per
         query segment: 13 vs 91)."""
         import os
@@ -134,8 +146,15 @@ class SearchIndex:
             load_simprint_bands,
             load_simprint_bands2,
         )
-        from iscc_search_spark.operators.simprints import granular_topk
+        from iscc_search_spark.operators.simprints import (
+            GRANULAR_DDL,
+            granular_topk,
+            granular_topk_local,
+        )
 
+        pdf = granular_topk_local(self.reader, query_text, k, max_hamming)
+        if pdf is not None:
+            return arrow_frame(self.spark, pdf, GRANULAR_DDL)
         if max_hamming >= 10 and os.path.isdir(self.cat.simprint_bands2):
             return granular_topk(
                 None, query_text, k=k, max_hamming=max_hamming,

@@ -14,11 +14,16 @@ or a Spark Connect client):
                                             distributed scorer over the cap)
     GET /more_like_this?doc_id=...&k=10  -> J5 (404 unknown doc)
     GET /similar?doc_id=...&k=10         -> multi-unit ISCC search from the
-                                            PERSISTED units table (404
+                                            PERSISTED units + band tables
+                                            (driver-local over the
+                                            reader's table caches; 404
                                             unknown doc)
     GET /granular?q=...&k=10&max_hamming=8
                                          -> chunk-level simprint search
-                                            from the PERSISTED simprints
+                                            from the PERSISTED band table
+                                            (driver-local likewise; both
+                                            fall back to the Spark
+                                            operators over the cache cap)
 
 Registry mode (pass ``base_path`` instead of ``index_dir``) serves the
 NAMED-index surface the reference's RemoteIndex client drives
@@ -111,13 +116,23 @@ class SearchApp:
         return vals[0]
 
     def _require_doc(self, doc_id: int) -> None:
-        hit = (
-            self.spark.read.parquet(self.index.cat.docs)
-            .filter(F.col("doc_id") == doc_id)
-            .select("doc_id")
-            .limit(1)
-            .collect()
-        )
+        """404 unless the doc is indexed: answered from the reader's cached
+        units table (one row per doc), by a docs scan above its cap."""
+        from iscc_search_spark.operators.multiunit import unit_row
+
+        reader = self.index.reader
+        reader.ensure_fresh()
+        tables = reader.sim_tables("units")
+        if tables is not None:
+            hit = unit_row(tables[0], doc_id) is not None
+        else:
+            hit = (
+                self.spark.read.parquet(self.index.cat.docs)
+                .filter(F.col("doc_id") == doc_id)
+                .select("doc_id")
+                .limit(1)
+                .collect()
+            )
         if not hit:
             raise ApiError(404, f"doc_id {doc_id} not indexed")
 

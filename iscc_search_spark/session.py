@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -105,3 +107,26 @@ def spread_small(df, factor: int = 1):
     if size < (1 << 30) or df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
+
+
+_ARROW_TYPES = {"int": pa.int32(), "long": pa.int64(), "double": pa.float64()}
+
+
+def arrow_frame(spark: SparkSession, data, ddl: str) -> DataFrame:
+    """A small driver-built DataFrame handed to the JVM as one Arrow table.
+
+    ``data`` is a pandas frame or a list of row tuples in ``ddl``'s column
+    order (int / long / double columns).  The frame is a local relation:
+    collecting it runs no Spark job, where a frame built from Python rows
+    runs a Python worker at every collect (≈ 0.4 s for 10 rows on a
+    4-CPU host, against ≈ 10 ms here); an empty frame needs no special
+    case."""
+    fields = [f.split() for f in ddl.split(",")]
+    if isinstance(data, pd.DataFrame):
+        cols = [data[n].to_numpy() for n, _ in fields]
+    else:
+        cols = list(zip(*data)) or [()] * len(fields)
+    table = pa.table(
+        {n: pa.array(c, type=_ARROW_TYPES[t]) for (n, t), c in zip(fields, cols)}
+    )
+    return spark.createDataFrame(table, ddl)

@@ -28,10 +28,6 @@ PAGES_SCHEMA = T.StructType(
 )
 
 
-def read_pages_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_pages_json(spark: SparkSession, path: str) -> DataFrame:
     """JSON-lines pages (S1).  Explicit schema — no sampling pass."""
     schema = T.StructType([f for f in PAGES_SCHEMA.fields if f.name != "html"])

@@ -59,17 +59,38 @@ def test_search_endpoint_matches_engine(served, spark):
     assert [r["score"] for r in rows] == list(want["score"])
 
 
-def test_similar_and_granular_serve_persisted_tables(served, pages_df):
-    base, _ = served
+def test_similar_and_granular_serve_persisted_tables(served, pages_df, spark):
+    """/similar and /granular answer like the Spark operators over the
+    persisted band tables, and (caches warm) run no Spark job per request."""
+    from iscc_search_spark.operators.build import (
+        load_simprint_bands,
+        load_unit_bands,
+        load_units,
+    )
+    from iscc_search_spark.operators.multiunit import search_assets_multiunit
+    from iscc_search_spark.operators.simprints import granular_topk
+
+    base, d = served
     url0 = pages_df.select("url").orderBy("url").first()["url"]
     did = doc_id_for_url(url0)
-    status, rows = _get(base + f"/similar?doc_id={did}&k=5")
-    assert status == 200  # self-excluded; may be empty on a clean corpus
     txt = pages_df.orderBy("url").first()["text"][:400]
-    status, rows = _get(
-        base + "/granular?q=" + urllib.request.quote(txt) + "&k=5&max_hamming=8"
-    )
+    similar = base + f"/similar?doc_id={did}&k=5"
+    granular = base + "/granular?q=" + urllib.request.quote(txt) + "&k=5&max_hamming=8"
+    want_sim = [r.asDict() for r in search_assets_multiunit(
+        None, did, k=5, units=load_units(spark, d), bands=load_unit_bands(spark, d)
+    ).collect()]
+    want_gran = [r.asDict() for r in granular_topk(
+        None, txt, k=5, max_hamming=8, bands=load_simprint_bands(spark, d)
+    ).collect()]
+    _get(similar), _get(granular)  # fill the reader's table caches
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(), default=-1)
+    status, rows = _get(similar)
+    assert status == 200 and rows == want_sim  # self-excluded; may be empty
+    status, rows = _get(granular)
     assert status == 200 and rows and rows[0]["doc_id"] == did
+    assert rows == want_gran
+    assert max(tracker.getJobIdsForGroup(), default=-1) == last_job
 
 
 def test_error_mapping(served):
