@@ -4,9 +4,9 @@ bitpacking, numpy-vectorized.
 The compressed-posting analogue of the reference's LMDB dupsort pages
 (sorted duplicate doc-id runs per term key,
 iscc_search/indexes/lmdb/index.py:395-422): ascending doc_ids are
-delta-encoded (first value zigzag'd — doc_ids are signed 64-bit blake2b
-prefixes) and LEB128-varbyte packed; term frequencies are varbyte packed
-in parallel.
+delta-encoded (in sign-flipped uint64 space — doc_ids are signed 64-bit
+blake2b prefixes) and LEB128-varbyte packed; term frequencies are varbyte
+packed in parallel.
 
 Both encode and decode are numpy-vectorized: the per-value work is a loop
 over *byte positions* (≤10 iterations of whole-array ops), never over
@@ -20,12 +20,6 @@ import numpy as np
 
 _U64 = np.uint64
 _MAX_VARBYTE_LEN = 10
-
-
-def zigzag(v: np.ndarray) -> np.ndarray:
-    """Signed int64 -> uint64 zigzag (small magnitude -> small code)."""
-    v = v.astype(np.int64, copy=False)
-    return ((v << 1) ^ (v >> 63)).view(np.uint64)
 
 
 def varbyte_lengths(values: np.ndarray) -> np.ndarray:

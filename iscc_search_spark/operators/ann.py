@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from iscc_search_spark.operators.neardup import simhash_bands
+from iscc_search_spark.session import arrow_frame
 
 
 def _dot_expr(a, b):
@@ -274,9 +275,8 @@ def ivf_ann_topk(
         )
     qrow = embeddings.filter(F.col(id_col) == query_vec_id).select(vec_col).collect()
     spark = embeddings.sparkSession
-    empty = spark.createDataFrame([], "rank long, vec_id long, cosine double")
     if not qrow:
-        return empty
+        return arrow_frame(spark, [], "rank long, vec_id long, cosine double")
     qv = np.array(list(qrow[0][0]), dtype=np.float64)
     d2 = _ordered_sqdist(qv, centroids.astype(np.float64))
     probe = np.argsort(d2, kind="stable")[:n_probe]  # ties -> lowest cell

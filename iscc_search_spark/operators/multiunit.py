@@ -60,6 +60,7 @@ MATCH_THRESHOLD = 0.75  # per-unit confidence floor (reference default)
 CONF_EXPONENT = 4       # score^4 weighting (reference default)
 _MAX_HAMMING = 16       # 1 - 16/64 == 0.75 exactly (dyadic)
 SIMILAR_DDL = "rank long, doc_id long, score double, n_units long"
+NPHD_DDL = "rank long, doc_id long, nphd double, score double"
 
 
 def asset_units(
@@ -157,11 +158,8 @@ def nphd_topk(
     table.  ``max_nphd=None`` keeps the unbounded full scan-and-sort."""
     spark = units.sparkSession
     q = units.filter(F.col("doc_id") == query_doc_id).collect()
-    empty = spark.createDataFrame(
-        [], "rank long, doc_id long, nphd double, score double"
-    )
     if not q:
-        return empty
+        return arrow_frame(spark, [], NPHD_DDL)
     q_hi = int(q[0][hi_col])
     q_lo = int(q[0][lo_col]) if q[0][lo_col] is not None else 0
     q_bits = int(q[0][bits_col])
@@ -308,11 +306,8 @@ def nphd_topk_wide(
     spark = units.sparkSession
     limb_cols = ["u0", "u1", "u2", "u3"]
     q = units.filter(F.col("doc_id") == query_doc_id).collect()
-    empty = spark.createDataFrame(
-        [], "rank long, doc_id long, nphd double, score double"
-    )
     if not q:
-        return empty
+        return arrow_frame(spark, [], NPHD_DDL)
     q_limbs = [int(q[0][c]) if q[0][c] is not None else 0 for c in limb_cols]
     q_bits = int(q[0]["bits"])
     d = nphd_expr_wide(

@@ -37,6 +37,7 @@ from iscc_search_spark.operators.wand import (
     decode_block_ids,
     decode_block_positions,
 )
+from iscc_search_spark.session import arrow_frame
 
 # token positions fit 32 bits (a single document with >2^32 tokens is not a
 # document); (dense doc index, adjusted position) packs into one uint64 key
@@ -117,13 +118,12 @@ def phrase_match(
     answered entirely from the positional postings (no text access)."""
     r = _as_reader(spark, index)
     toks = tokenize_py(phrase)
-    empty = spark.createDataFrame([], "doc_id long")
     if not toks:
-        return empty
+        return arrow_frame(spark, [], "doc_id long")
     slots = [(t, i) for i, t in enumerate(toks)]
     distinct = sorted({t for t, _ in slots})
     if len(r.term_dfs(distinct)) < len(distinct):
-        return empty  # a phrase term is absent from the corpus
+        return arrow_frame(spark, [], "doc_id long")  # a term is absent
     blocks = r.candidate_blocks(distinct)
     return blocks.groupBy("shard").applyInPandas(
         _phrase_shard_matcher(slots), "doc_id long"

@@ -37,6 +37,9 @@ from pyspark.sql import functions as F
 
 from iscc_search_spark.config import BM25Config
 from iscc_search_spark.functions.textnorm import tokenize_py, tokens_expr
+from iscc_search_spark.session import arrow_frame
+
+_SCORES = "doc_id long, score double"
 
 
 def doc_term_tf(docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id") -> DataFrame:
@@ -103,8 +106,6 @@ def _bm25_scores_onepass(
     """
     from iscc_search_spark.session import spread_small
 
-    spark = docs.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score double")
     # Tokenize ONCE: the token array is materialized behind an exchange +
     # lazy localCheckpoint so the per-term projections reference the
     # stored column.  Inlined (CollapseProject) the split/regex would
@@ -144,7 +145,7 @@ def _bm25_scores_onepass(
     ).collect()[0]
     n_docs = int(stats["n"])
     if n_docs == 0:
-        return empty
+        return arrow_frame(docs.sparkSession, [], _SCORES)
     avgdl = int(stats["total"]) / n_docs
     term_df = {
         t: int(stats[f"_df{i}"])
@@ -152,7 +153,7 @@ def _bm25_scores_onepass(
         if int(stats[f"_df{i}"] or 0) > 0
     }
     if not term_df:
-        return empty
+        return arrow_frame(docs.sparkSession, [], _SCORES)
     idf = query_idf(term_df, n_docs)
     # The per-doc length normalization k1*(1-b + b*dl/avgdl) is factored
     # into its own column: referenced once per term, inlining it made the
@@ -207,9 +208,8 @@ def bm25_scores(
         lens_df = doc_lengths(docs, text_col, doc_col)
 
     n_docs, avgdl = corpus_stats(lens_df)
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if not terms or n_docs == 0:
-        return empty
+        return arrow_frame(spark, [], _SCORES)
 
     # exact df for the query terms only — filter pushes to the scan
     df_rows = (
@@ -220,7 +220,7 @@ def bm25_scores(
     )
     term_df = {r["term"]: int(r["df"]) for r in df_rows}
     if not term_df:
-        return empty
+        return arrow_frame(spark, [], _SCORES)
     idf = query_idf(term_df, n_docs)
 
     k1, b = bm25.k1, bm25.b

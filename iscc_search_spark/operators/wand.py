@@ -26,12 +26,16 @@ iscc_search/indexes/usearch/index.py:735-881 — see SURVEY.md §3.1):
    reference's (-score, iscc_id_body), lmdb_ops.py:249) then a global
    merge.
 
-The three entry points share the query prep and the kernel: a single
-query (``bm25_wand_topk``) is a batch of one merged by one
-TakeOrderedAndProject; the driver-local fast path
-(``bm25_wand_topk_local``) runs the kernel once over the whole candidate
-set, zero Spark jobs; ``bm25_wand_topk_batch`` merges per query_id.
-A query is ONE Spark job end-to-end (stats cached, blocks scanned once);
+The entry points share the query prep and the kernel.  The driver-local
+path (``_local_topk``) runs the kernel once over a query batch's whole
+candidate set from the reader's posting-bucket cache, zero Spark jobs; it
+serves ``bm25_wand_topk_local`` (one query: /search), and
+``SearchIndex.search`` / ``search_many``, up to _LOCAL_POSTINGS_CAP
+candidate postings.  The Spark operators run the kernel per shard: a
+single query (``bm25_wand_topk``) is a batch of one merged by one
+TakeOrderedAndProject, ``bm25_wand_topk_batch`` merges per query_id; they
+answer above the cap and are the registry gates' path.
+A Spark query is ONE job end-to-end (stats cached, blocks scanned once);
 the doc-sharded layout means each shard scores its own disjoint doc set
 with complete information — no cross-shard traffic except the final
 k-row merge (the classic distributed-search fan-out; scales to 1000
@@ -44,6 +48,7 @@ import math
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -51,17 +56,18 @@ from iscc_search_spark.catalog import IndexCatalog, check_format
 from iscc_search_spark.functions import codec
 from iscc_search_spark.functions.textnorm import tokenize_py
 from iscc_search_spark.operators.build import _bucket_of
+from iscc_search_spark.session import arrow_frame
 
 # driver-side term-stats cache cap: at web scale (~10^8-10^9 distinct terms)
 # the full table no longer fits a driver comfortably — above the cap the
 # reader falls back to bucket-pruned distributed lookups per query batch
 _STATS_CACHE_MAX_ROWS = 20_000_000
 
-# driver-side cap on the bytes a reader's derived-table caches hold (units
-# and the band tables behind search_similar / search_granular, at most 8 B
-# a cell; separate from the 256 MB posting-bucket cache); a table that
-# would push the cache past it is not cached and those queries run as
-# Spark jobs.
+# driver-side cap on the bytes a reader's table caches hold (units and the
+# band tables behind search_similar / search_granular, 8 B a cell; the docs
+# sidecar columns behind search(with_metadata) / get_doc, in Arrow bytes;
+# separate from the 256 MB posting-bucket cache); a table that would push
+# the cache past it is not cached and those queries run as Spark jobs.
 # Peak memory of one fill is about 3x the table's cached bytes (the Arrow
 # table, its numpy columns and the sorted copies coexist until it returns);
 # fills run one at a time per reader, so that peak is paid once at a time.
@@ -95,7 +101,8 @@ def decode_block_positions(pos_buf: bytes, tfs: np.ndarray) -> np.ndarray:
 class IndexReader:
     """Open-index handle: meta + driver-cached term stats + a reused blocks
     relation (one parquet listing per open, not per query), plus lazily
-    filled caches of posting buckets and of the derived similarity tables.
+    filled caches of posting buckets, of the derived similarity tables and
+    of the docs sidecar columns.
 
     upsert_docs/delete_docs rewrite postings/term_stats/meta in place; a
     long-lived reader detects this via the meta.json mtime (one os.stat per
@@ -136,7 +143,7 @@ class IndexReader:
         # after _pa_dataset: a bucket_blocks call that sees this new cache
         # also sees the reset dataset, so it never caches old-version files
         self._bucket_cache: dict[int, pd.DataFrame] = {}
-        self._sim_cache: dict[str, dict[str, np.ndarray] | None] = {}
+        self._sim_cache: dict[str, dict | None] = {}
         self._meta_mtime = mtime  # published last: the reload is complete
 
     def pa_dataset(self):
@@ -177,8 +184,9 @@ class IndexReader:
 
     # derived tables for the similarity queries, as numpy columns sorted
     # for searchsorted lookups: units by doc_id, the band tables by (band,
-    # key).  Each is filled by one pyarrow read on its first similarity
-    # call, never in _open (a reader open must stay cheap).
+    # key); and the docs sidecar columns that search(with_metadata) and
+    # get_doc return, by doc_id.  Each is filled by one pyarrow read on its
+    # first call, never in _open (a reader open must stay cheap).
     _SIM_TABLES = {
         "units": (("doc_id", "content_sh", "data_sh", "instance"), ("doc_id",)),
         "unit_bands": (("band", "key", "doc_id"), ("band", "key")),
@@ -186,12 +194,17 @@ class IndexReader:
             ("band", "key", "doc_id", "seg_idx", "simhash", "sh_lo"),
             ("band", "key"),
         ),
+        "docs": (
+            ("doc_id", "url", "lang", "simhash", "doc_len", "instance"),
+            ("doc_id",),
+        ),
     }
 
-    def sim_tables(self, *names: str) -> list[dict[str, np.ndarray]] | None:
-        """The named derived tables, all from one index version; None when
-        one is missing, holds nulls, or would push the cache past
-        _SIM_CACHE_BYTES (the caller then answers through Spark)."""
+    def sim_tables(self, *names: str) -> list[dict] | None:
+        """The named tables, all from one index version; None when one is
+        missing, holds nulls (docs: a null or duplicated doc_id), or would
+        push the cache past _SIM_CACHE_BYTES (the caller then answers
+        through Spark)."""
         cache = self._sim_cache  # this version's cache, even mid-reload
         out = []
         for name in names:
@@ -205,7 +218,7 @@ class IndexReader:
         return out
 
     def _load_sim_table(self, name: str, cache: dict) -> dict | None:
-        """One table's sorted numpy columns (called under _sim_lock, so the
+        """One table's sorted columns (called under _sim_lock, so the
         budget check sees every table this cache holds)."""
         import os
 
@@ -218,8 +231,12 @@ class IndexReader:
         d = ds.dataset(path, format="parquet", partitioning="hive")
         n = d.count_rows()
         used = sum(a.nbytes for t in cache.values() if t for a in t.values())
+        # 8 B a cell is exact for the numpy columns and a lower bound for
+        # strings: the docs columns are checked again once read
         if used + 8 * len(cols) * n > _SIM_CACHE_BYTES:
             return None
+        if name == "docs":
+            return _docs_columns(d.to_table(columns=list(cols)), used)
         if n == 0:
             return {c: np.empty(0, np.int64) for c in cols}
         t = d.to_table(columns=list(cols))
@@ -270,6 +287,38 @@ class IndexReader:
 
     def candidate_blocks(self, terms: list[str]) -> DataFrame:
         return self.blocks.filter(_term_filter_sql(terms, self.n_buckets))
+
+
+def _docs_columns(t, used: int) -> dict | None:
+    """The docs sidecar sorted by doc_id: doc_id as numpy (searchsorted
+    keys), the rest as Arrow arrays, nulls kept (rows are gathered with
+    ``take``).  None for a null or duplicated doc_id, where one lookup
+    would answer for what a join returns as several rows, and when the
+    Arrow bytes would pass _SIM_CACHE_BYTES."""
+    if t.column("doc_id").null_count:
+        return None
+    ids = t.column("doc_id").to_numpy()
+    order = np.argsort(ids, kind="stable")
+    ids = ids[order]
+    if len(ids) and (ids[1:] == ids[:-1]).any():
+        return None
+    t = t.take(order)
+    out = {"doc_id": ids}
+    out.update({c: t.column(c).combine_chunks() for c in t.column_names[1:]})
+    if used + sum(a.nbytes for a in out.values()) > _SIM_CACHE_BYTES:
+        return None
+    return out
+
+
+def docs_rows(docs: dict, doc_ids: np.ndarray) -> dict:
+    """The cached docs columns gathered at ``doc_ids`` (Arrow arrays; a
+    doc_id not in the table gets nulls, like a left join)."""
+    ids = docs["doc_id"]
+    pos = np.searchsorted(ids, doc_ids)
+    hit = pos < len(ids)
+    hit[hit] = ids[pos[hit]] == doc_ids[hit]
+    idx = pa.array(np.where(hit, pos, 0), pa.int64(), mask=~hit)
+    return {c: a.take(idx) for c, a in docs.items() if c != "doc_id"}
 
 
 def _term_filter_sql(terms: list[str], n_buckets: int) -> str:
@@ -451,7 +500,7 @@ def _shard_scorer(
 
 _SCORES = "query_id long, doc_id long, score double"
 
-# a single query whose terms together touch at most this many postings is
+# a query batch whose terms together touch at most this many postings is
 # answered driver-side (pyarrow row-group-pruned read + the same numpy
 # scorer) — the serving fast path, mirroring the reference's single-node
 # LMDB reads; bigger candidate sets fall back to the distributed path
@@ -460,21 +509,18 @@ _SCORES = "query_id long, doc_id long, score double"
 _LOCAL_POSTINGS_CAP = 5_000_000
 
 
-def bm25_wand_topk_local(
-    index: IndexReader, query: str, k: int = 10
-) -> pd.DataFrame:
-    """(rank, doc_id, score) pandas result, ZERO Spark jobs.
-
-    Bit-identical to the distributed path: the whole candidate set scores
-    as ONE "shard" through the same kernel (sharding only partitions docs;
-    each doc's term-ordered sum is unchanged).  Queries whose candidate
-    postings exceed _LOCAL_POSTINGS_CAP fall back to the distributed
-    scorer (same result, executor-side memory).
-    """
-    r = index
-    term_df, query_idf = _query_idf(r, {0: query})
+def _local_topk(
+    r: IndexReader, queries: dict[int, str], k: int
+) -> pd.DataFrame | None:
+    """(query_id, rank, doc_id, score) of a query batch, ZERO Spark jobs:
+    the batch's candidate blocks (cached buckets, a pyarrow read on a
+    miss) score as ONE "shard" through the same kernel.  Each query's
+    rows come out of the kernel contiguous and in rank order.  None when
+    the batch's terms together touch more than _LOCAL_POSTINGS_CAP
+    postings (the caller then runs the Spark operator)."""
+    term_df, query_idf = _query_idf(r, queries)
     if sum(term_df.values()) > _LOCAL_POSTINGS_CAP:
-        return bm25_wand_topk(r.spark, r, query, k).toPandas()
+        return None
 
     buckets = sorted({_bucket_of(t, r.n_buckets) for t in term_df})
     parts: list[pd.DataFrame] = []
@@ -501,11 +547,31 @@ def bm25_wand_topk_local(
         if parts
         else pd.DataFrame(columns=IndexReader._BLOCK_COLS)
     )
-    # one query = one signature: the kernel's rows are its top k, in order
     out = _shard_scorer(query_idf, r.k1, r.b, r.avgdl, k)((None,), pdf)
-    out = out.drop(columns="query_id")
-    out.insert(0, "rank", np.arange(1, len(out) + 1, dtype=np.int64))
+    qid = out["query_id"].to_numpy()
+    first = np.ones(len(qid), dtype=bool)  # each query's first (top) row
+    first[1:] = qid[1:] != qid[:-1]
+    start = np.flatnonzero(first)
+    run_len = np.diff(start, append=len(qid))
+    out.insert(1, "rank", np.arange(1, len(qid) + 1) - np.repeat(start, run_len))
     return out
+
+
+def bm25_wand_topk_local(
+    index: IndexReader, query: str, k: int = 10
+) -> pd.DataFrame:
+    """(rank, doc_id, score) pandas result, ZERO Spark jobs.
+
+    Bit-identical to the distributed path: the whole candidate set scores
+    as ONE "shard" through the same kernel (sharding only partitions docs;
+    each doc's term-ordered sum is unchanged).  Queries whose candidate
+    postings exceed _LOCAL_POSTINGS_CAP fall back to the distributed
+    scorer (same result, executor-side memory).
+    """
+    out = _local_topk(index, {0: query}, k)
+    if out is None:
+        return bm25_wand_topk(index.spark, index, query, k).toPandas()
+    return out.iloc[:, 1:]  # without query_id
 
 
 def bm25_wand_topk(
@@ -519,7 +585,7 @@ def bm25_wand_topk(
     r = _as_reader(spark, index)
     term_df, query_idf = _query_idf(r, {0: query})
     if not query_idf:
-        return spark.createDataFrame([], "rank long, doc_id long, score double")
+        return arrow_frame(spark, [], "rank long, doc_id long, score double")
 
     blocks = r.candidate_blocks(sorted(term_df))
     local_topk = blocks.groupBy("shard").applyInPandas(
@@ -547,8 +613,8 @@ def bm25_wand_topk_batch(
     r = _as_reader(spark, index)
     term_df, query_idf = _query_idf(r, queries)
     if not query_idf:
-        return spark.createDataFrame(
-            [], "query_id long, rank long, doc_id long, score double"
+        return arrow_frame(
+            spark, [], "query_id long, rank long, doc_id long, score double"
         )
 
     blocks = r.candidate_blocks(sorted(term_df))

@@ -6,6 +6,7 @@ DataFrame plan directly — SURVEY.md §4 'what needs a custom rule: nothing').
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -14,10 +15,29 @@ from iscc_search_spark.functions.textnorm import tokenize_py
 from iscc_search_spark.operators.neardup import simhash_neardup_pairs
 from iscc_search_spark.operators.wand import (
     IndexReader,
+    _local_topk,
     bm25_wand_topk,
     bm25_wand_topk_batch,
+    docs_rows,
 )
 from iscc_search_spark.session import arrow_frame
+
+# the Spark paths' columns, names and types: row_number's rank is never null
+TOPK_DDL = "rank long NOT NULL, doc_id long, score double"
+BATCH_DDL = "query_id long, rank long NOT NULL, doc_id long, score double"
+SEARCH_DDL = (
+    "doc_id long, rank long NOT NULL, score double, url string, lang string,"
+    " simhash long, doc_len long"
+)
+_DOC_COLS = ("doc_id", "url", "lang", "doc_len", "simhash", "instance")
+
+
+def _docs_join(spark: SparkSession, cat: IndexCatalog, topk: DataFrame) -> DataFrame:
+    """search(with_metadata)'s Spark path: topk left-joined with docs."""
+    docs = spark.read.parquet(cat.docs).select(
+        "doc_id", "url", "lang", "simhash", "doc_len"
+    )
+    return topk.join(docs, "doc_id", "left").orderBy("rank")
 
 
 class SearchIndex:
@@ -33,19 +53,37 @@ class SearchIndex:
 
     def search(self, query: str, k: int = 10, with_metadata: bool = True) -> DataFrame:
         """BM25 top-k; optionally enriched with the docs sidecar (J4 — the
-        reference's post-top-k metadata lookup, usearch/index.py:841-875)."""
-        topk = bm25_wand_topk(self.spark, self.reader, query, k)
-        if not with_metadata:
-            return topk
-        docs = self.spark.read.parquet(self.cat.docs).select(
-            "doc_id", "url", "lang", "simhash", "doc_len"
-        )
-        return topk.join(docs, "doc_id", "left").orderBy("rank")
+        reference's post-top-k metadata lookup, usearch/index.py:841-875).
+
+        Answered driver-side, zero Spark jobs: the reader's posting-bucket
+        cache and the one WAND kernel score the query, the reader's cached
+        docs columns give the metadata, and the ≤ k rows reach Spark
+        through Arrow.  Over the local postings cap the Spark operator
+        (``bm25_wand_topk``) scores; when the docs columns are not cached
+        (over _SIM_CACHE_BYTES, or a doc_id that is on two docs rows) the
+        metadata comes from a left join with the docs table."""
+        ranked = _local_topk(self.reader, {0: query}, k)
+        if ranked is None:
+            topk = bm25_wand_topk(self.spark, self.reader, query, k)
+        else:
+            ranked = ranked.drop(columns="query_id")
+            docs = self.reader.sim_tables("docs") if with_metadata else None
+            if docs is not None:
+                rows = docs_rows(docs[0], ranked["doc_id"].to_numpy())
+                return arrow_frame(self.spark, {**ranked, **rows}, SEARCH_DDL)
+            topk = arrow_frame(self.spark, ranked, TOPK_DDL)
+        return _docs_join(self.spark, self.cat, topk) if with_metadata else topk
 
     def search_many(self, queries: dict[int, str], k: int = 10) -> DataFrame:
-        """Batched BM25 top-k: one Spark job for the whole query set
-        (blocks decoded once per shard, shared across queries)."""
-        return bm25_wand_topk_batch(self.spark, self.reader, queries, k)
+        """Batched BM25 top-k, (query_id, rank, doc_id, score).  Answered
+        driver-side like ``search``: one kernel run scores the whole batch
+        over the reader's cached posting buckets (blocks decoded once,
+        shared across queries), zero Spark jobs.  Above the local postings
+        cap, one Spark job (``bm25_wand_topk_batch``)."""
+        ranked = _local_topk(self.reader, queries, k)
+        if ranked is None:
+            return bm25_wand_topk_batch(self.spark, self.reader, queries, k)
+        return arrow_frame(self.spark, ranked, BATCH_DDL)
 
     def more_like_this(self, doc_id: int, k: int = 10) -> DataFrame:
         """J5: expand the stored document's terms into a query, excluding
@@ -76,11 +114,24 @@ class SearchIndex:
     def get_doc(self, doc_id: int) -> dict:
         """Stored metadata of one document (the reference's get_asset,
         protocols/index.py + remote/client.py:229-243): KeyError if the
-        doc is not indexed."""
+        doc is not indexed.  Answered from the reader's cached docs
+        columns (zero Spark jobs); by a docs scan when they are not cached
+        (over _SIM_CACHE_BYTES, or a duplicated doc_id)."""
+        self.reader.ensure_fresh()
+        docs = self.reader.sim_tables("docs")
+        if docs is not None:
+            cols = docs[0]
+            i = int(np.searchsorted(cols["doc_id"], doc_id))
+            if i == len(cols["doc_id"]) or cols["doc_id"][i] != doc_id:
+                raise KeyError(f"doc_id {doc_id} not indexed")
+            return {
+                "doc_id": int(cols["doc_id"][i]),
+                **{c: cols[c][i].as_py() for c in _DOC_COLS[1:]},
+            }
         rows = (
             self.spark.read.parquet(self.cat.docs)
             .filter(F.col("doc_id") == doc_id)
-            .select("doc_id", "url", "lang", "doc_len", "simhash", "instance")
+            .select(*_DOC_COLS)
             .limit(1)
             .collect()
         )

@@ -12,6 +12,9 @@ or a Spark Connect client):
     GET /search?q=...&k=10               -> BM25 top-k (driver-local fast
                                             path; falls back to the
                                             distributed scorer over the cap)
+    GET /doc?doc_id=...                  -> stored docs row (driver-local
+                                            from the reader's docs cache;
+                                            404 unknown doc)
     GET /more_like_this?doc_id=...&k=10  -> J5 (404 unknown doc)
     GET /similar?doc_id=...&k=10         -> multi-unit ISCC search from the
                                             PERSISTED units + band tables

@@ -93,6 +93,28 @@ def test_similar_and_granular_serve_persisted_tables(served, pages_df, spark):
     assert max(tracker.getJobIdsForGroup(), default=-1) == last_job
 
 
+def test_doc_route_answers_from_the_docs_cache(served, pages_df, spark):
+    """/doc returns the docs sidecar row; warm, neither a hit nor a 404
+    starts a Spark job."""
+    base, d = served
+    row = pages_df.orderBy("url").first()
+    did = doc_id_for_url(row["url"])
+    want = (
+        spark.read.parquet(d + "/docs")
+        .filter(f"doc_id = {did}")
+        .select("doc_id", "url", "lang", "doc_len", "simhash", "instance")
+        .first()
+        .asDict()
+    )
+    assert _get(base + f"/doc?doc_id={did}") == (200, want)  # fills the cache
+    tracker = spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(), default=-1)
+    assert _get(base + f"/doc?doc_id={did}") == (200, want)
+    assert want["url"] == row["url"] and want["lang"] == row["lang"]
+    assert _get_err(base + "/doc?doc_id=12345")[0] == 404
+    assert max(tracker.getJobIdsForGroup(), default=-1) == last_job
+
+
 def test_error_mapping(served):
     base, _ = served
     assert _get_err(base + "/search?k=5")[0] == 400            # missing q
