@@ -47,7 +47,6 @@ def main() -> None:
     )
     from iscc_search_spark.operators.build import (
         build_index,
-        load_simprint_bands2,
         load_simprints,
         load_unit_bands,
         load_units,
@@ -59,10 +58,7 @@ def main() -> None:
         search_assets_multiunit,
     )
     from iscc_search_spark.operators.phrase import phrase_match
-    from iscc_search_spark.operators.simprints import (
-        granular_candidate_fraction,
-        granular_topk,
-    )
+    from iscc_search_spark.operators.simprints import granular_candidate_fraction
     from iscc_search_spark.operators.wand import (
         IndexReader,
         bm25_wand_topk,
@@ -115,25 +111,11 @@ def main() -> None:
                 n_parts=cpus, n_shards=n_shards, group_size=cpus, derived=False,
             ),
         )
-        # FULL build measured twice: combo2=False is method-constant with
-        # round 4 (same artifact set: units + simprints + single-band
-        # tables), so the r4->r5 delta isolates engine changes; the
-        # separate _combo2 entry prices the round-5 C(14,2) band table
-        # (the artifact that turned the combo2 query into a <1 s lookup).
         idx_full = os.path.join(rdir, "index_full")
         timed(
             "index_build_pages_full",
             lambda: build_index(
                 spark, pages, idx_full, cfg=cfg,
-                n_parts=cpus, n_shards=n_shards, group_size=cpus, derived=True,
-                combo2=False,
-            ),
-        )
-        idx_full2 = os.path.join(rdir, "index_full_combo2")
-        timed(
-            "index_build_pages_full_combo2",
-            lambda: build_index(
-                spark, pages, idx_full2, cfg=cfg,
                 n_parts=cpus, n_shards=n_shards, group_size=cpus, derived=True,
             ),
         )
@@ -197,15 +179,6 @@ def main() -> None:
         )
 
         sp = load_simprints(spark, docs_idx)
-        # served by KEYED LOOKUP from the persisted C(14,2) combo2 band
-        # table (round-4 computed combo keys per query from a scan)
-        timed(
-            "a7_granular_combo2_persisted",
-            lambda: granular_topk(
-                None, GRANULAR_QUERY_TEXT, k=10, max_hamming=12,
-                bands2=load_simprint_bands2(spark, docs_idx), simprints=sp,
-            ).collect(),
-        )
         if rnd == 0:  # prune selectivity is data-deterministic — once
             for h in (12, 7):  # gate threshold + serving-typical threshold
                 for c in (1, 2):

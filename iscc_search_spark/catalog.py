@@ -31,16 +31,9 @@ fingerprint columns), everything else is derived and re-creatable from it.
                               per-type similarity index memory
       simprint_bands/part=N/  (doc_id, seg_idx, simhash, sh_lo, band,
                               key) — 13 ~10-bit-key rows/segment over
-                              the 128-bit simprint, same layout/trade
-      simprint_bands2/part=N/ same columns, C(14,2)=91 two-band-combo
-                              ~18-bit keys/segment in segment-major
-                              order (RLE collapses the repeated doc
-                              columns): exact recall for max_hamming
-                              <= 12 at ~40x fewer random collisions
-                              than the single-band table — the
-                              high-threshold serving path trades band-
-                              table storage for ~50x fewer candidates
-                              admitted per query
+                              the 128-bit simprint, same layout/trade;
+                              exact recall for max_hamming <= 12, the
+                              one persisted granular candidate filter
       meta.json               (n_docs, avgdl, config, lineage)
       _checkpoints/           per-input-partition fingerprints (resumability)
       _metrics/               build lineage + throughput rows
@@ -76,7 +69,10 @@ import os
 # scale).  Hash semantics are unchanged, but a version-4 index upserted
 # by a version-5 writer would leave part dirs with MIXED combo2 schemas
 # (the inline simhash/sh_lo columns surfacing as nulls), silently
-# breaking the hamming verify — hence the bump.
+# breaking the hamming verify — hence the bump.  The table is no longer
+# written (the 13-band simprint_bands table is exact for every threshold
+# it served); a version-5 index that still holds the dir keeps opening,
+# serving and upserting with it ignored, and a full rebuild removes it.
 FORMAT_VERSION = 5
 
 
@@ -127,10 +123,6 @@ class IndexCatalog:
     @property
     def simprint_bands(self) -> str:
         return self.path("simprint_bands")
-
-    @property
-    def simprint_bands2(self) -> str:
-        return self.path("simprint_bands2")
 
     @property
     def checkpoints(self) -> str:

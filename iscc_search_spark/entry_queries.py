@@ -337,6 +337,16 @@ def _ordered_sum_sql(x: str) -> str:
 
 
 def _ordered_sum_col(c):
+    """Ordered float64 fold of one group: sort the group's values, then add
+    them left to right.
+
+    Scale bound: ``collect_list`` gathers the whole group into ONE array in
+    one task (8 bytes a value, plus the sort), and ``a1_tpch_q1_pricing``'s
+    ``applyInPandas`` likewise holds one group in one pandas frame, so the
+    largest group must fit in one executor's memory.  No tree fold can lift
+    that bound: the frozen semantics are the sequential IEEE fold over the
+    ascending values (bit-identical to the oracle's ``list_reduce``), and
+    per-partition partial sums round differently."""
     return F.aggregate(
         F.array_sort(F.collect_list(c)), F.lit(0.0), lambda acc, v: acc + v
     )
@@ -1352,29 +1362,6 @@ SELECT CAST(rank AS BIGINT) AS rank, doc_id, round(score, 6) AS score, n_matched
   SELECT doc_id, score, n_matched_segs,
          row_number() OVER (ORDER BY score DESC, doc_id) AS rank FROM sc
 ) WHERE rank <= 10"""
-
-    # same semantics served from the persisted COMBO2 band table (C(14,2)
-    # two-band keys): exact recall for max_hamming <= 12, so the result —
-    # and therefore the oracle — is identical to the single-band gate;
-    # what this gate evidences is that the combo2 lookup path admits the
-    # same matches while fetching ~40x fewer candidates
-    def a7_combo2(spark, sf):
-        from iscc_search_spark.operators.build import (
-            load_simprint_bands2,
-            load_simprints,
-        )
-        from iscc_search_spark.operators.simprints import granular_topk
-
-        idx = _built_index(spark, sf)
-        out = granular_topk(
-            None, GRANULAR_QUERY, k=10, max_hamming=12,
-            bands2=load_simprint_bands2(spark, idx),
-            simprints=load_simprints(spark, idx),
-        )
-        return out.withColumn("score", F.round("score", 6))
-
-    queries["a7_granular_combo2_lookup"] = a7_combo2
-    oracles["a7_granular_combo2_lookup"] = oracles["a7_granular_simprint_search"]
 
     # --- relational operator demos over the TPC-H-ish tables ---------------
     def tpch_q1(spark, sf):

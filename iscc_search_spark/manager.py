@@ -42,7 +42,6 @@ _COMPONENTS = (
     "simprints",
     "unit_bands",
     "simprint_bands",
-    "simprint_bands2",
 )
 
 

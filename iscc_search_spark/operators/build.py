@@ -87,10 +87,6 @@ POSTINGS_SCHEMA = (
 # gave ~5-bit keys — a 0.79-0.90 measured candidate fraction at h=12)
 UNIT_BANDS = 17
 SEG_BANDS = 13
-# two-band-combo table: 14 bands give exact recall for max_hamming <= 12
-# under combo=2 (pigeonhole: a pair within h has >= 14 - h >= 2 clean
-# bands, so at least one clean PAIR of bands); C(14, 2) = 91 keys/segment
-SEG_BANDS2 = 14
 
 
 @dataclass
@@ -397,35 +393,26 @@ def build_derived(
     spark: SparkSession,
     cat: IndexCatalog,
     parts: list[int] | None = None,
-    combo2: bool = True,
 ) -> None:
     """Write/refresh the units + simprints tables from docs.
 
     ``parts=None`` -> full rebuild (clean overwrite of both tables);
-    ``parts=[...]`` -> rewrite only those part dirs (upsert/delete path).
-    ``combo2=False`` skips the C(14,2) high-threshold band table — its 91
-    rows/segment are ~7x the single-band write volume (the Manku-style
-    multi-block-permutation trade: storage for high-threshold lookup
-    selectivity), and a deployment serving only max_hamming < 10 does not
-    need it.  The incremental path auto-skips it when the table was never
-    built."""
+    ``parts=[...]`` -> rewrite only those part dirs (upsert/delete path)."""
     import os
     import shutil
 
     if parts is not None and not parts:
         return
     docs = spark.read.parquet(cat.docs)
-    if parts is not None:
-        # maintenance rewrites what exists; never resurrects a skipped tier
-        combo2 = combo2 and os.path.isdir(cat.simprint_bands2)
-    tables = (
-        cat.units, cat.simprints, cat.unit_bands, cat.simprint_bands,
-    ) + ((cat.simprint_bands2,) if combo2 else ())
+    tables = (cat.units, cat.simprints, cat.unit_bands, cat.simprint_bands)
     if parts is None:
         # full overwrite must not leave stale part dirs behind; cleared
         # dirs -> static committer (no per-partition staging moves)
         for t in tables:
             shutil.rmtree(t, ignore_errors=True)
+        # the retired two-band-combo table of format-5 builds; upserts
+        # leave a leftover dir alone (nothing reads it)
+        shutil.rmtree(cat.path("simprint_bands2"), ignore_errors=True)
         mode = "static"
         n = max(len(_read_checkpoint_rows(spark, cat)), 1)
     else:
@@ -436,10 +423,10 @@ def build_derived(
             for t in tables:
                 shutil.rmtree(os.path.join(t, f"part={p}"), ignore_errors=True)
 
-    # The five table writes below share nothing but the docs scan — they
+    # The four table writes below share nothing but the docs scan — they
     # are submitted from a small thread pool (guide-§2.6 overlap) so the
     # tail of one write's stage back-fills cores for the next instead of
-    # serializing five jobs.  FIFO scheduling keeps the earlier job's
+    # serializing four jobs.  FIFO scheduling keeps the earlier job's
     # tasks first; the pool is joined (and any failure re-raised) before
     # returning.
     write_jobs = []
@@ -550,58 +537,6 @@ def build_derived(
         )
     )
 
-    # combo2 band table: C(14, 2) two-band concatenated keys (~18 bits)
-    # per segment — the HIGH-threshold serving path (max_hamming 10..12),
-    # where the single-band table's ~10-bit keys admit ~1-2% of the table
-    # but a two-band key admits ~0.03%.  This is the multi-block
-    # permutation scheme of Manku et al. (WWW'07) generalized: choose 2
-    # clean blocks out of 14, exact for h <= 12.  Band id = combo index,
-    # enumeration shared with the query side
-    # (operators/simprints.py:_band_combos).  Write-cost discipline
-    # (profiled at 182k segments / 16.5M rows): the 14 base band keys are
-    # materialized ONCE as columns; the 91 combo keys are 2-op shift-or
-    # expressions posexploded as ONE primitive long array (pos = band id;
-    # a struct-array explode was ~15% slower); no extra repartition (the
-    # input is already aligned to the docs part dirs) and no sort —
-    # segment-major order lets parquet RLE collapse the 91x repeated
-    # (doc_id, seg_idx, simhash, sh_lo) runs (42.6 MB vs 114.6 MB
-    # sorted) with equal-or-better lookup latency (the keyed join prunes
-    # via the broadcast side's runtime bloom filter, not row-group
-    # stats).  Total table write: 11.9 s -> 4.3 s at bench scale.  The
-    # write is VOLUME-bound, not CPU-bound — on the single-box emulation
-    # 16 cores share one memory bus, so this stage understates real
-    # N->4N cluster scaling (executors bring their own buses/disks);
-    # BENCH/BASELINE.md carries the measured MB/s and the per-core-count
-    # cost of this stage separately.
-    if combo2:
-        from iscc_search_spark.operators.simprints import _band_combos
-
-        widths2 = band_widths(SEG_BANDS2, SIMPRINT_BITS)
-        base2 = sp
-        for i, (shift, w) in enumerate(widths2):
-            base2 = base2.withColumn(
-                f"_b{i}", band_key128_expr("simhash", "sh_lo", shift, w)
-            )
-        combo_keys = [
-            F.shiftleft(F.col(f"_b{i}"), widths2[j][1]).bitwiseOR(F.col(f"_b{j}"))
-            for (i, j) in _band_combos(SEG_BANDS2, 2)
-        ]
-        # format_version 5: the 91x-repeated rows carry ONLY the lookup
-        # key and the (doc_id, seg_idx) pointer — the two 64-bit hash
-        # limbs (the bulk of the old volume; doc/seg columns RLE away)
-        # are joined back from the simprints table at query time, where
-        # candidates are k-row scale (load_simprint_bands2 /
-        # granular_topk).  This is the write-volume fix for the one
-        # sub-0.8 scaling leg.
-        sb2 = base2.select(
-            "part", "doc_id", "seg_idx",
-            F.posexplode(F.array(*combo_keys)).alias("band", "key"),
-        ).select(
-            "part", "doc_id", "seg_idx",
-            F.col("band").cast("int").alias("band"), "key",
-        )
-        write_jobs.append(("derived: simprint_bands2", sb2, cat.simprint_bands2))
-
     from concurrent.futures import ThreadPoolExecutor
 
     def _run(job):
@@ -648,22 +583,6 @@ def load_simprint_bands(spark: SparkSession, index_dir: str) -> DataFrame:
     cat = IndexCatalog(index_dir)
     return spark.read.parquet(cat.simprint_bands).select(
         "doc_id", "seg_idx", "simhash", "sh_lo", "band", "key"
-    )
-
-
-def load_simprint_bands2(spark: SparkSession, index_dir: str) -> DataFrame:
-    """(doc_id, seg_idx, band, key) combo2 lookup rows (C(14,2) = 91
-    two-band ~18-bit keys over the 128-bit simprint; exact recall for
-    max_hamming <= 12).
-
-    format_version 5 stores no hash limbs in this table, keeping the 91x
-    write volume minimal: pass ``load_simprints`` as granular_topk's
-    ``simprints=`` too, so it joins simhash/sh_lo back AFTER the keyed
-    candidate prune (k-row scale)."""
-    cat = IndexCatalog(index_dir)
-    check_format(cat.read_meta(), "load_simprint_bands2")
-    return spark.read.parquet(cat.simprint_bands2).select(
-        "doc_id", "seg_idx", "band", "key"
     )
 
 
@@ -1269,12 +1188,18 @@ def build_index(
     resume: bool = True,
     run_id: str = "run",
     derived: bool = True,
-    combo2: bool = True,
+    combo2: bool = False,
 ) -> BuildResult:
     """Full build: stage A (resumable) + stage B (postings) + stage C
     (persisted similarity tables; ``derived=False`` skips stage C for a
-    postings-only build; ``combo2=False`` skips only the high-threshold
-    C(14,2) band table, see build_derived)."""
+    postings-only build).  ``combo2`` is kept for callers that pass the
+    old default-off value; the two-band-combo table it built is retired,
+    so ``combo2=True`` raises ValueError."""
+    if combo2:
+        raise ValueError(
+            "combo2=True: the two-band-combo simprint table is no longer "
+            "built; simprint_bands is exact for every max_hamming <= 12"
+        )
     t0 = time.time()
     cat = IndexCatalog(index_dir)
     built, skipped = build_segments(
@@ -1291,7 +1216,7 @@ def build_index(
     if derived:
         refresh = bool(skipped) and cat.exists("units")
         derived_job = lambda: build_derived(  # noqa: E731
-            spark, cat, parts=built if refresh else None, combo2=combo2
+            spark, cat, parts=built if refresh else None
         )
     res = _alongside(
         lambda: build_postings(spark, cat, cfg, n_shards, run_id, publish=False),

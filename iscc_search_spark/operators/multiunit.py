@@ -57,7 +57,6 @@ from iscc_search_spark.operators.simprints import band_rows, band_widths, ranked
 from iscc_search_spark.session import arrow_frame
 
 MATCH_THRESHOLD = 0.75  # per-unit confidence floor (reference default)
-CONF_EXPONENT = 4       # score^4 weighting (reference default)
 _MAX_HAMMING = 16       # 1 - 16/64 == 0.75 exactly (dyadic)
 SIMILAR_DDL = "rank long, doc_id long, score double, n_units long"
 NPHD_DDL = "rank long, doc_id long, nphd double, score double"
@@ -457,6 +456,8 @@ def search_assets_multiunit(
         return F.col(c) >= F.lit(MATCH_THRESHOLD)
 
     def pow4(c: str) -> Column:
+        # score^4 weighting (the reference's default exponent), as the
+        # left-associated product the oracle and the local kernel use
         x = F.col(c)
         return x * x * x * x
 

@@ -40,6 +40,8 @@ from iscc_search_spark.functions.textnorm import tokenize_py, tokens_expr
 from iscc_search_spark.session import arrow_frame
 
 _SCORES = "doc_id long, score double"
+# most distinct query terms bm25_scores sends down the one-pass path
+_ONEPASS_MAX_TERMS = 64
 
 
 def doc_term_tf(docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id") -> DataFrame:
@@ -194,7 +196,7 @@ def bm25_scores(
     bm25 = bm25 or BM25Config()
     spark = docs.sparkSession
     terms = sorted(set(query_terms))
-    if tf_df is None and lens_df is None and 0 < len(terms) <= 64:
+    if tf_df is None and lens_df is None and 0 < len(terms) <= _ONEPASS_MAX_TERMS:
         # single-pass path for ad-hoc queries: per-term tf as JVM column
         # expressions — no explode, no corpus-wide (doc, term) shuffle,
         # and the corpus is tokenized twice (stats job + scoring job)

@@ -43,8 +43,9 @@ hamming verify and coverage scoring in numpy over the IndexReader's
 cached ``simprint_bands`` table (it carries the hash limbs), zero Spark
 jobs per query (the first call loads the table with one pyarrow read).
 Size gate: when the table is missing or would push the reader's cache
-past ``wand._SIM_CACHE_BYTES``, the facade runs ``granular_topk`` over
-the persisted band tables (combo2 for max_hamming >= 10 when built); the
+past ``wand._SIM_CACHE_BYTES``, the facade runs ``granular_topk``'s
+keyed lookup over the same persisted ``simprint_bands`` table — the one
+persisted candidate filter, exact for every max_hamming <= 12.  The
 Spark operator also backs the registry gates and is the tests' reference.
 """
 
@@ -335,6 +336,18 @@ def granular_candidate_fraction(
     return cand / total if total else 0.0
 
 
+def _check_band_bound(max_hamming: int) -> None:
+    """Refuse thresholds the persisted simprint_bands table cannot answer
+    with exact recall (pigeonhole: max_hamming < SEG_BANDS)."""
+    from iscc_search_spark.operators.build import SEG_BANDS
+
+    if max_hamming >= SEG_BANDS:
+        raise ValueError(
+            f"max_hamming={max_hamming} exceeds the persisted band "
+            f"table's exact-recall bound (bands_n={SEG_BANDS})"
+        )
+
+
 def granular_topk(
     docs: DataFrame | None,
     query_text: str,
@@ -345,9 +358,6 @@ def granular_topk(
     n_bands: int | None = None,
     combo: int = 1,
     bands: DataFrame | None = None,
-    bands_n: int = 13,
-    bands2: DataFrame | None = None,
-    bands2_n: int = 14,
 ) -> DataFrame:
     """(rank, doc_id, score, n_matched_segs) top-k docs containing segments
     similar to the query's segments — banded-LSH candidate join over the
@@ -359,38 +369,20 @@ def granular_topk(
     Pass ``simprints`` (the persisted build artifact,
     operators/build.py:load_simprints) for the serving path — segmenting
     raw ``docs`` per query is the cold-start fallback only.  Pass
-    ``bands`` (load_simprint_bands, written at ``bands_n`` fixed ~10-bit
+    ``bands`` (load_simprint_bands, written at SEG_BANDS fixed ~10-bit
     bands over the 128-bit hash) to fetch candidates by KEYED LOOKUP from
     the persisted LSH table instead of banding the simprints scan per
-    query; recall stays exact for max_hamming < bands_n (pigeonhole on
-    the frozen banding).  Pass ``bands2`` (load_simprint_bands2, written
-    as C(bands2_n, 2) two-band-combo keys) for the HIGH-threshold
-    serving path: same keyed-lookup shape but each key carries two
-    bands' bits, admitting ~40x fewer random collisions; recall stays
-    exact for max_hamming <= bands2_n - 2.  A slim ``bands2`` (no hash
-    limbs, format_version 5) needs ``simprints`` as well: the limbs are
-    joined back from it after the keyed prune."""
-    if bands2 is not None:
-        if max_hamming > bands2_n - 2:
-            raise ValueError(
-                f"max_hamming={max_hamming} exceeds the persisted combo2 "
-                f"band table's exact-recall bound (bands2_n - 2 = "
-                f"{bands2_n - 2})"
-            )
-        spark = bands2.sparkSession
-    elif bands is not None:
-        if max_hamming >= bands_n:
-            raise ValueError(
-                f"max_hamming={max_hamming} exceeds the persisted band "
-                f"table's exact-recall bound (bands_n={bands_n})"
-            )
+    query; recall stays exact for max_hamming < SEG_BANDS (pigeonhole on
+    the frozen banding)."""
+    if bands is not None:
+        _check_band_bound(max_hamming)
         spark = bands.sparkSession
     else:
         if simprints is None:
             simprints = simprints_table(docs, seg_tokens=seg_tokens)
         spark = simprints.sparkSession
     n_bands = n_bands if n_bands is not None else max_hamming + combo
-    if bands is None and bands2 is None and max_hamming > n_bands - combo:
+    if bands is None and max_hamming > n_bands - combo:
         raise ValueError(
             f"max_hamming={max_hamming} needs n_bands >= max_hamming + combo "
             f"(got n_bands={n_bands}, combo={combo}) for exact recall"
@@ -400,32 +392,10 @@ def granular_topk(
         return arrow_frame(spark, [], GRANULAR_DDL)
     n_q = len(qsegs)
 
-    if bands2 is not None:
-        # combo2 keyed lookup: enumeration order shared with the build
-        # writer (build.py:build_derived seg2_entries)
-        q = arrow_frame(spark, _query_keys(qsegs, bands2_n, 2), _QUERY_KEYS_DDL)
-        cands = bands2.join(F.broadcast(q), ["band", "key"])
-        if "simhash" not in bands2.columns:
-            # format_version-5 slim table: the hash limbs live only in
-            # the simprints table.  Dedup the candidate (doc, seg, q_seg)
-            # triples FIRST — hamming is a pure function of the triple,
-            # so deduping before the verify is result-identical — then
-            # join the limbs back at k-row scale.
-            if simprints is None:
-                raise ValueError(
-                    "bands2 has no simhash/sh_lo columns; pass the "
-                    "simprints table (load_simprints) as simprints="
-                )
-            cands = (
-                cands.select("doc_id", "seg_idx", "q_seg", "q_hi", "q_lo")
-                .dropDuplicates(["doc_id", "seg_idx", "q_seg"])
-                .join(
-                    simprints.select("doc_id", "seg_idx", "simhash", "sh_lo"),
-                    ["doc_id", "seg_idx"],
-                )
-            )
-    elif bands is not None:
-        q = arrow_frame(spark, _query_keys(qsegs, bands_n, 1), _QUERY_KEYS_DDL)
+    if bands is not None:
+        from iscc_search_spark.operators.build import SEG_BANDS
+
+        q = arrow_frame(spark, _query_keys(qsegs, SEG_BANDS, 1), _QUERY_KEYS_DDL)
         cands = bands.join(F.broadcast(q), ["band", "key"])
     else:
         cands = _banded_candidates(simprints, qsegs, n_bands, combo)
@@ -508,11 +478,7 @@ def granular_topk_local(
     the reader's cache cap): the caller then runs granular_topk."""
     from iscc_search_spark.operators.build import SEG_BANDS
 
-    if max_hamming >= SEG_BANDS:
-        raise ValueError(
-            f"max_hamming={max_hamming} exceeds the persisted band "
-            f"table's exact-recall bound (bands_n={SEG_BANDS})"
-        )
+    _check_band_bound(max_hamming)
     reader.ensure_fresh()
     tables = reader.sim_tables("simprint_bands")
     if tables is None:

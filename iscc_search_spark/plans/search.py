@@ -186,17 +186,9 @@ class SearchIndex:
         """Chunk-level simprint search (exact recall for max_hamming <=
         12).  Answered driver-side from the reader's cached simprint_bands
         table (granular_topk_local); above the cache cap, or without the
-        derived tables, by the Spark operator's keyed lookup.  There, high
-        thresholds (>= 10) route to the combo2 table, whose two-band keys
-        admit ~40x fewer random collisions than the single-band keys;
-        low thresholds use the single-band table (fewer lookup keys per
-        query segment: 13 vs 91)."""
-        import os
-
-        from iscc_search_spark.operators.build import (
-            load_simprint_bands,
-            load_simprint_bands2,
-        )
+        derived tables, by the Spark operator's keyed lookup into the same
+        persisted table."""
+        from iscc_search_spark.operators.build import load_simprint_bands
         from iscc_search_spark.operators.simprints import (
             GRANULAR_DDL,
             granular_topk,
@@ -206,12 +198,6 @@ class SearchIndex:
         pdf = granular_topk_local(self.reader, query_text, k, max_hamming)
         if pdf is not None:
             return arrow_frame(self.spark, pdf, GRANULAR_DDL)
-        if max_hamming >= 10 and os.path.isdir(self.cat.simprint_bands2):
-            return granular_topk(
-                None, query_text, k=k, max_hamming=max_hamming,
-                bands2=load_simprint_bands2(self.spark, self.cat.root),
-                simprints=self.simprints(),
-            )
         return granular_topk(
             None, query_text, k=k, max_hamming=max_hamming,
             bands=load_simprint_bands(self.spark, self.cat.root),

@@ -84,6 +84,10 @@ def get_spark(
     return spark
 
 
+# spread_small's "shuffle is cheap" bound on the optimizer size estimate
+_SPREAD_MAX_BYTES = 1 << 30
+
+
 def spread_small(df, factor: int = 1):
     """Round-robin-repartition a SMALL input to the session's default
     parallelism before an expensive per-row (usually Python) stage.
@@ -104,7 +108,7 @@ def spread_small(df, factor: int = 1):
         )
     except Exception:  # stats unavailable: fall back to the count check
         size = 1 << 40
-    if size < (1 << 30) or df.rdd.getNumPartitions() < par:
+    if size < _SPREAD_MAX_BYTES or df.rdd.getNumPartitions() < par:
         return df.repartition(par)
     return df
 

@@ -86,3 +86,62 @@ def test_rank_identity_across_partitionings(docs, oracle):
             for r in bm25_exact_topk(d, q, k=10).orderBy("rank").collect()
         ]
         assert got == want, nparts
+
+
+# --- size-gated branches forced at small data ---------------------------------
+
+
+def _scores(df) -> dict[int, str]:
+    return {r["doc_id"]: r["score"].hex() for r in df.collect()}
+
+
+def test_bm25_scores_onepass_gate_both_sides(docs, oracle, monkeypatch):
+    """``query._ONEPASS_MAX_TERMS`` picks the single-pass or the relational
+    scorer; forced either way, a short and a long (> 64-term) query give
+    bit-identical scores on both paths, equal to the oracle's."""
+    from iscc_search_spark.operators import query
+
+    limit = query._ONEPASS_MAX_TERMS
+    vocab = sorted(oracle.postings)
+    assert len(vocab) > limit
+    short = generate_queries(10)[3]
+    long_q = " ".join(vocab[: limit + 6])
+    onepass = []
+    real_onepass = query._bm25_scores_onepass
+    monkeypatch.setattr(
+        query, "_bm25_scores_onepass",
+        lambda *a, **k: onepass.append(1) or real_onepass(*a, **k),
+    )
+
+    for q, default_onepass in ((short, True), (long_q, False)):
+        want = {d: s.hex() for d, s in oracle.search(q, k=10**6)}
+        assert want, q
+        for cap, expect in ((limit, default_onepass), (0, False), (10**6, True)):
+            monkeypatch.setattr(query, "_ONEPASS_MAX_TERMS", cap)
+            onepass.clear()
+            got = _scores(query.bm25_scores(docs, tokenize_py(q)))
+            assert bool(onepass) is expect, (q[:20], cap)
+            assert got == want, (q[:20], cap)
+
+
+def test_spread_small_gate_both_sides(spark, monkeypatch):
+    """``session._SPREAD_MAX_BYTES``: below it the input is repartitioned
+    to the default parallelism, above it (forced to 0, with enough
+    partitions) returned as is; the rows are unchanged either way."""
+    from iscc_search_spark import session
+
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 500, numPartitions=par + 3).selectExpr("id", "id * 7 AS v")
+    want = sorted(map(tuple, df.collect()))
+
+    small = session.spread_small(df)
+    assert small is not df and small.rdd.getNumPartitions() == par
+    assert sorted(map(tuple, small.collect())) == want
+
+    monkeypatch.setattr(session, "_SPREAD_MAX_BYTES", 0)
+    assert session.spread_small(df) is df
+    # the partition-count check still spreads a too-coarse input
+    coarse = df.coalesce(1)
+    spread = session.spread_small(coarse)
+    assert spread.rdd.getNumPartitions() == par
+    assert sorted(map(tuple, spread.collect())) == want

@@ -8,7 +8,9 @@
 - dup_clusters converges on chains longer than max_iter via pointer
   doubling, and raises (never returns split labels) when genuinely out of
   rounds;
-- the 128-bit term-hash cache never grows past its cap.
+- the 128-bit term-hash cache never grows past its cap;
+- the retired two-band-combo simprint table: a leftover dir is ignored
+  by serving and upserts and removed by a full rebuild.
 """
 
 from __future__ import annotations
@@ -116,32 +118,117 @@ def test_dup_clusters_raises_when_out_of_rounds(spark):
         dup_clusters(pairs, max_iter=1)
 
 
-def test_combo2_false_tier(spark, pages_df, tmp_path):
-    """combo2=False builds every artifact except the high-threshold band
-    table; the facade falls back to the single-band lookup at h >= 10;
-    incremental maintenance never resurrects the skipped tier."""
-    import os
+def _granular_brute(texts: dict, query: str, max_h: int, k: int) -> list:
+    """(doc_id, score hex, n_matched_segs) top k by re-segmenting every
+    doc text with segment_simhashes_py — no index table involved."""
+    from iscc_search_spark.operators.simprints import segment_simhashes_py
 
-    from iscc_search_spark.operators.build import upsert_docs
+    u64 = (1 << 64) - 1
+    qsegs = segment_simhashes_py(query)
+    best: dict = {}
+    for did, text in texts.items():
+        for *_, hi, lo in segment_simhashes_py(text):
+            for s, *_, qh, ql in qsegs:
+                h = bin((hi ^ qh) & u64).count("1") + bin((lo ^ ql) & u64).count("1")
+                if h <= max_h:
+                    m = best.setdefault(did, {})
+                    m[s] = max(m.get(s, 0.0), 1.0 - h / 128.0)
+    scored = sorted(
+        ((d, sum(m.values()) / len(qsegs), len(m)) for d, m in best.items()),
+        key=lambda r: (-r[1], r[0]),
+    )
+    return [(d, s.hex(), n) for d, s, n in scored[:k]]
+
+
+def _granular_rows(df) -> list:
+    return [
+        (r["doc_id"], r["score"].hex(), r["n_matched_segs"])
+        for r in df.orderBy("rank").collect()
+    ]
+
+
+def test_retired_combo_table_dir_ignored_then_removed(
+    spark, pages_df, tmp_path, monkeypatch
+):
+    """The two-band-combo simprint table is no longer written.  A
+    format-5 index that still holds its dir upserts and serves with it
+    ignored (high thresholds answer the same driver-local and through the
+    Spark lookup, equal to a brute force over the doc texts); a full
+    rebuild removes the dir; ``combo2=True`` is refused."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from iscc_search_spark.corpus import doc_id_for_url
+    from iscc_search_spark.operators import simprints, wand
+    from iscc_search_spark.operators.simprints import granular_topk_local
     from iscc_search_spark.plans.search import SearchIndex
 
-    d = str(tmp_path / "lean2")
-    build_index(
-        spark, pages_df.limit(40), d, cfg=EngineConfig(),
-        n_parts=2, n_shards=2, group_size=2, combo2=False,
+    src = pages_df.orderBy("url").limit(40)
+    d = str(tmp_path / "idx")
+    kw = dict(cfg=EngineConfig(), n_parts=2, n_shards=2, group_size=2)
+    build_index(spark, src, d, **kw)
+    leftover = os.path.join(d, "simprint_bands2")
+    assert os.path.isdir(IndexCatalog(d).simprint_bands)
+    assert not os.path.exists(leftover)
+
+    # what a format-5 combo2 build left: the slim (doc_id, seg_idx, band,
+    # key) rows in hive part dirs
+    os.makedirs(os.path.join(leftover, "part=0"))
+    pq.write_table(
+        pa.table({"doc_id": [1, 2], "seg_idx": [0, 0], "band": [0, 1],
+                  "key": [5, 6]}),
+        os.path.join(leftover, "part=0", "part-00000.parquet"),
     )
-    cat = IndexCatalog(d)
-    assert os.path.isdir(cat.simprint_bands)
-    assert not os.path.isdir(cat.simprint_bands2)
-    ix = SearchIndex(spark, d)
-    txt = pages_df.orderBy("url").first()["text"][:300]
-    assert ix.search_granular(txt, k=3, max_hamming=12).count() >= 1
-    # upsert maintains the existing tables but does not create bands2
-    delta = pages_df.limit(3).selectExpr(
-        "url", "concat(text, ' changed') AS text", "lang"
+
+    pages = {r["url"]: r["text"] for r in src.collect()}
+    first, second = sorted(pages)[:2]
+    text0 = pages[first]
+    delta = {"http://leftover.test/copy": text0 + " zzextra tail words",
+             second: "brand new words for this document entirely"}
+    upsert_docs(
+        spark,
+        spark.createDataFrame(
+            [(u, t, "en") for u, t in delta.items()],
+            "url string, text string, lang string",
+        ),
+        d, cfg=EngineConfig(),
     )
-    upsert_docs(spark, delta, d, cfg=EngineConfig())
-    assert not os.path.isdir(cat.simprint_bands2)
+    assert os.path.isdir(leftover)  # left alone: nothing reads it
+    pages.update(delta)
+    texts = {doc_id_for_url(u): t for u, t in pages.items()}
+
+    queries = [text0[:600], text0[200:900] + " other words"]
+    want = {
+        (q, mh): _granular_brute(texts, q, mh, 10)
+        for q in queries for mh in (10, 11, 12)
+    }
+    assert doc_id_for_url("http://leftover.test/copy") in {
+        r[0] for r in want[(queries[0], 10)]
+    }
+    si = SearchIndex(spark, d)
+    for (q, mh), rows in want.items():
+        assert granular_topk_local(si.reader, q, 10, mh) is not None
+        assert _granular_rows(si.search_granular(q, 10, mh)) == rows, mh
+
+    monkeypatch.setattr(wand, "_SIM_CACHE_BYTES", 0)
+    calls = []
+    spark_topk = simprints.granular_topk
+    monkeypatch.setattr(
+        simprints, "granular_topk",
+        lambda *a, **k: calls.append(k) or spark_topk(*a, **k),
+    )
+    si = SearchIndex(spark, d)
+    for (q, mh), rows in want.items():
+        assert granular_topk_local(si.reader, q, 10, mh) is None
+        assert _granular_rows(si.search_granular(q, 10, mh)) == rows, mh
+    assert len(calls) == len(want)
+    assert all(set(c) == {"k", "max_hamming", "bands"} for c in calls)
+
+    build_index(spark, src, d, resume=False, **kw)
+    assert not os.path.exists(leftover)
+    with pytest.raises(ValueError, match="combo2"):
+        build_index(spark, src, str(tmp_path / "c2"), combo2=True, **kw)
+    assert not os.path.exists(str(tmp_path / "c2"))
 
 
 def test_term128_cache_never_exceeds_cap(monkeypatch):

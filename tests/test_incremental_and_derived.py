@@ -140,58 +140,6 @@ def test_band_lookup_matches_scan_filter(spark, pages_df, built):
     with pytest.raises(ValueError):  # frozen banding bound is enforced
         granular_topk(None, txt, max_hamming=13, bands=sb)
 
-    # combo2 persisted lookup: same results as the combo2 scan path AND
-    # the combo1 paths (all are exact-recall prunes over the same verify)
-    from iscc_search_spark.operators.build import load_simprint_bands2
-
-    sb2 = load_simprint_bands2(spark, built)
-    g2_scan = [
-        (r["doc_id"], r["score"]) for r in
-        granular_topk(None, txt, k=10, max_hamming=12, simprints=sp,
-                      combo=2).collect()
-    ]
-    g2_lookup = [
-        (r["doc_id"], r["score"]) for r in
-        granular_topk(None, txt, k=10, max_hamming=12, bands2=sb2,
-                      simprints=sp).collect()
-    ]
-    assert g2_lookup == g2_scan == g_scan
-    with pytest.raises(ValueError):  # combo2 bound: max_hamming <= 14 - 2
-        granular_topk(None, txt, max_hamming=13, bands2=sb2, simprints=sp)
-
-
-def test_combo2_lookup_takes_simprints_explicitly(spark, pages_df, built):
-    """The slim combo2 table's hash limbs come from the ``simprints=``
-    argument, so a derived (filtered) bands2 DataFrame still answers."""
-    from iscc_search_spark.operators.build import load_simprint_bands2
-    from iscc_search_spark.operators.simprints import granular_topk
-
-    sp = load_simprints(spark, built)
-    sb2 = load_simprint_bands2(spark, built)
-    txt = pages_df.orderBy("url").first()["text"][:600]
-
-    def lookup(bands2, **kw):
-        return [
-            (r["doc_id"], r["score"]) for r in granular_topk(
-                None, txt, k=10, max_hamming=12, bands2=bands2, **kw
-            ).collect()
-        ]
-
-    full = lookup(sb2, simprints=sp)
-    assert full
-    assert lookup(sb2.filter(F.col("band") >= 0), simprints=sp) == full
-    top = full[0][0]
-    keep = F.col("doc_id") != top
-    want = [
-        (r["doc_id"], r["score"]) for r in
-        granular_topk(None, txt, k=10, max_hamming=12,
-                      simprints=sp.filter(keep), combo=2).collect()
-    ]
-    assert lookup(sb2.filter(keep), simprints=sp) == want
-    assert top not in dict(want)
-    with pytest.raises(ValueError, match="simprints"):
-        lookup(sb2)
-
 
 def test_band_tables_maintained_on_upsert_delete(spark, pages_df, built):
     from iscc_search_spark.operators.build import (
@@ -227,18 +175,6 @@ def test_band_tables_maintained_on_upsert_delete(spark, pages_df, built):
         sb.groupBy("doc_id", "seg_idx").count().select("count").distinct().collect()
     )
     assert [r["count"] for r in per_seg] == [SEG_BANDS]
-    # the combo2 table is maintained too: C(SEG_BANDS2, 2) rows/segment,
-    # deleted doc gone
-    from math import comb
-
-    from iscc_search_spark.operators.build import SEG_BANDS2, load_simprint_bands2
-
-    sb2 = load_simprint_bands2(spark, built)
-    assert sb2.filter(F.col("doc_id") == did).count() == 0
-    per_seg2 = (
-        sb2.groupBy("doc_id", "seg_idx").count().select("count").distinct().collect()
-    )
-    assert [r["count"] for r in per_seg2] == [comb(SEG_BANDS2, 2)]
 
 
 # --- incremental stage B: shard granularity -----------------------------------

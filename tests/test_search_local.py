@@ -43,8 +43,7 @@ def _rows_of(pages) -> list[tuple[str, str, str]]:
 
 def _build(spark, d: str, rows, **kw) -> str:
     df = spark.createDataFrame(rows, "url string, text string, lang string")
-    build_index(spark, df, d, cfg=CFG, n_parts=4, n_shards=4, group_size=4,
-                combo2=False, **kw)
+    build_index(spark, df, d, cfg=CFG, n_parts=4, n_shards=4, group_size=4, **kw)
     return d
 
 

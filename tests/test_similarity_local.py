@@ -60,8 +60,7 @@ def _pages(n: int = N_DOCS, seed: int = 9) -> list[tuple[str, str, str]]:
 
 def _build(spark, d: str, rows) -> str:
     df = spark.createDataFrame(rows, "url string, text string, lang string")
-    build_index(spark, df, d, cfg=CFG, n_parts=4, n_shards=4, group_size=4,
-                combo2=False)
+    build_index(spark, df, d, cfg=CFG, n_parts=4, n_shards=4, group_size=4)
     return d
 
 
